@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.util.control.NonFatal
+
 import graft.core.Tables
 import org.apache.spark.sql.SparkSession
 
@@ -137,13 +139,56 @@ object Bench {
     def peakBytes: Long = peak.get()
   }
 
+  /** Times up to `runs` repeats of `body`, returning the wall seconds of
+    * each (ascending) and the first failure. A throw ends the repeats: a
+    * failing query is reported as failed, never timed as a fast one.
+    *
+    * Between repeats runs an untimed GC tick: queries that localCheckpoint
+    * leave dead RDD blocks that ContextCleaner only drops after their
+    * references are COLLECTED. With the tick only per-query, run 2 and 3
+    * of a storage-heavy query measured eviction pressure on top of the
+    * query (q138's in-suite dispersion [33.1, 59.8, 98.8] — the r8
+    * adjudication tax; the r7 294s-vs-125s phantom was the cross-query
+    * form). The short sleep lets the cleaner thread drain the reference
+    * queue before the next timed run. Deliberately cached index tables
+    * stay referenced by their operators and survive this. No tick after
+    * the FINAL repeat: it only shielded the NEXT query's run 1, and the
+    * per-query median already absorbs a slow first run. */
+  private[graft] def timeRuns(runs: Int)(body: => Unit): (Seq[Double], Option[Throwable]) = {
+    val times = Seq.newBuilder[Double]
+    var error: Option[Throwable] = None
+    var run = 1
+    while (run <= runs && error.isEmpty) {
+      val t0 = System.nanoTime()
+      try body catch { case NonFatal(e) => error = Some(e) }
+      times += (System.nanoTime() - t0) / 1e9
+      if (run < runs && error.isEmpty) { System.gc(); Thread.sleep(150) }
+      run += 1
+    }
+    (times.result().sorted, error)
+  }
+
+  /** The detail JSON's `status` object (per query in `names` order: "ok"
+    * or "failed") and `errors` object (exception class per failure,
+    * including the streaming cascade's). */
+  private[graft] def statusJson(names: Seq[String],
+                                errors: Map[String, Throwable]): (String, String) = {
+    def quoted(s: String) = "\"" + s + "\""
+    (names.map(n => quoted(n) + ":" + quoted(if (errors.contains(n)) "failed" else "ok"))
+       .mkString("{", ",", "}"),
+     errors.toSeq.sortBy(_._1)
+       .map { case (n, e) => quoted(n) + ":" + quoted(e.getClass.getName) }
+       .mkString("{", ",", "}"))
+  }
+
   private def loadAvg: Double =
     java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .getSystemLoadAverage
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     // shuffle partitions follow the input size (clamped to [cores, 4×cores],
     // AQE coalesces the tail) — at the local fixture sizes this resolves to
     // the core count; at cluster scale it grows with the data
@@ -184,36 +229,26 @@ object Bench {
     // footnote), while here it runs against the same post-warmup state an
     // isolated fresh-JVM measurement sees. Isolation runs still skip it
     // unless asked for by name.
+    val errors = Map.newBuilder[String, Throwable]
+    def failed(name: String, e: Throwable): Unit = {
+      System.err.println(s"[bench] $name FAILED: $e")
+      errors += name -> e
+    }
     val cascadeMs =
       if (filter.exists(f => !f("streaming_cascade"))) -1.0
       else try streamingCascadeMs(spark)
-      catch { case _: Throwable => -1.0 }
-    val results = selected.map { case (name, fn) =>
+      catch { case NonFatal(e) => failed("streaming_cascade", e); -1.0 }
+    val results = selected.flatMap { case (name, fn) =>
       peakMem.reset()
-      val times = (1 to runs).map { run =>
-        val t0 = System.nanoTime()
-        // noop sink executes the FULL plan without collecting to the driver
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // untimed GC tick BETWEEN REPEATS, not just between queries:
-        // queries that localCheckpoint leave dead RDD blocks that
-        // ContextCleaner only drops after their references are COLLECTED.
-        // With the tick only per-query, run 2 and 3 of a storage-heavy
-        // query measured eviction pressure on top of the query (q138's
-        // in-suite dispersion [33.1, 59.8, 98.8] — the r8 adjudication
-        // tax; the r7 294s-vs-125s phantom was the cross-query form). The
-        // short sleep lets the cleaner thread drain the reference queue
-        // before the next timed run. Deliberately cached index tables stay
-        // referenced by their operators and survive this. No tick after
-        // the FINAL repeat: it only shielded the NEXT query's run 1, and
-        // the per-query median already absorbs a slow first run — dropping
-        // it saves ~250 gc+sleep rounds of untimed wall per suite.
-        if (run < runs) { System.gc(); Thread.sleep(150) }
-        dt
-      }.sorted
-      name -> (times, peakMem.peakBytes)
+      // noop sink executes the FULL plan without collecting to the driver
+      val (times, error) = timeRuns(runs) {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      }
+      error.foreach(failed(name, _))
+      if (error.isEmpty) Some(name -> (times, peakMem.peakBytes)) else None
     }
+    val errorMap = errors.result()
+    val (statusJs, errorsJs) = statusJson(selected.keys.toSeq.sorted, errorMap)
     val medians = results.map { case (k, (ts, _)) => k -> ts(ts.length / 2) }
     val qs = medians.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
@@ -232,7 +267,7 @@ object Bench {
     // chars of stdout, so the ~20 KB detail line at 236 queries not only
     // never parsed there (r7's "parsed": null) but its truncated tail
     // could shadow a parseable summary inside the scrape window.
-    val detail = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"dispersion":$disp,"peak_exec_mb":$peaks,"sf":"$sfDir","runs":$runs,"agg":"median","load_avg_start":$loadStart,"load_avg_end":$loadAvg,"cpus":$cpus,"streaming_cascade_ms":$cascadeMs}"""
+    val detail = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"dispersion":$disp,"peak_exec_mb":$peaks,"sf":"$sfDir","runs":$runs,"agg":"median","load_avg_start":$loadStart,"load_avg_end":$loadAvg,"cpus":$cpus,"streaming_cascade_ms":$cascadeMs,"status":$statusJs,"errors":$errorsJs}"""
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
       "/tmp/graft_bench_detail.json")
     try Files.write(java.nio.file.Paths.get(detailPath),
@@ -246,7 +281,8 @@ object Bench {
     }.mkString("{", ",", "}")
     val totalR = math.round(total * 1000) / 1000.0
     val cascadeR = math.round(cascadeMs * 10) / 10.0
-    println(s"""{"metric":"total","value":$totalR,"unit":"sec","queries":$topQs,"queries_n":${medians.size},"queries_shown":"slowest ${slowest.size} of ${medians.size}","detail_file":"$detailPath","sf":"$sfDir","runs":$runs,"agg":"median","load_avg_start":$loadStart,"load_avg_end":$loadAvg,"cpus":$cpus,"streaming_cascade_ms":$cascadeR}""")
+    println(s"""{"metric":"total","value":$totalR,"unit":"sec","queries":$topQs,"queries_n":${medians.size},"queries_shown":"slowest ${slowest.size} of ${medians.size}","detail_file":"$detailPath","sf":"$sfDir","runs":$runs,"agg":"median","load_avg_start":$loadStart,"load_avg_end":$loadAvg,"cpus":$cpus,"streaming_cascade_ms":$cascadeR,"failed":${errorMap.size}}""")
     spark.stop()
+    if (errorMap.nonEmpty) sys.exit(1)
   }
 }

@@ -4,13 +4,11 @@ import graft.functions.{KmvSketch, MinHashExpression, PortableHash}
 
 /** DuckDB oracle SQL for the sketch / LSH / ANN queries.
   *
-  * Round 1 left these as rows-only checks ("no_oracle") because their
-  * hashing was xxhash64 — Spark-only. Round 2 switches the *query surface*
-  * to the portable-arithmetic hashes of [[graft.functions.PortableHash]]
-  * (the xxhash64 kernels remain the production default inside the library),
+  * Every sketch in the library hashes with the portable arithmetic of
+  * [[graft.functions.PortableHash]] (there is no second, Spark-only hash),
   * which makes every stage — shingle hash, permutation minima, band
-  * buckets, SimHash bit votes, SRP hyperplanes, KMV bottom-k — exactly
-  * replayable by DuckDB, so the driver's hash gate covers them.
+  * buckets, SimHash bit votes, CMS counters, SRP hyperplanes, KMV bottom-k
+  * — exactly replayable by DuckDB, so the oracle gate covers them.
   *
   * Constants are interpolated from the SAME Scala objects the Spark
   * expressions use (permutation pairs, moduli, multipliers) — one source of
@@ -38,7 +36,7 @@ object SketchOracleSql {
     MinHashExpression.permPairs.map { case (a, b) => s"[$a, $b]" }.mkString("[", ", ", "]")
 
   /** signature CTE: portable shingle hash → 32 permutation minima
-    * (mirrors MinHashSignature eval in portable mode). */
+    * (mirrors MinHashSignature eval). */
   private val sigCte =
     s"""hs AS (
        |  SELECT doc_id, shingles,

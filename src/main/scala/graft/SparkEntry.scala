@@ -15,9 +15,8 @@ import org.apache.spark.sql.functions.col
   * parquet tables. Aggregates over money/measure doubles use the
   * order-independent decimal kernels of [[graft.functions.ExactAgg]] and
   * their SQL mirrors, so both engines produce bit-identical doubles.
-  * Queries whose computation is not SQL-expressible in DuckDB (xxhash64
-  * sketches, HLL, SRP-LSH) have no oracle entry and get the driver's
-  * rows-only check.
+  * Every query has an oracle entry: the sketch/LSH/ANN family hashes with
+  * engine-portable arithmetic that DuckDB replays ([[SketchOracleSql]]).
   */
 object SparkEntry {
 
@@ -76,12 +75,12 @@ object SparkEntry {
     "q30_text_stats" -> q(TextAnalysis.textStats),
     "q31_lang_id" -> q(TextAnalysis.langId),
     "q32_fingerprint" -> q(TextAnalysis.fingerprint),
-    "q33_minhash_signatures" -> q(t => Dedup.minhashSignatures(t, portable = true)),
+    "q33_minhash_signatures" -> q(t => Dedup.minhashSignatures(t)),
     "q34_minhash_dup_pairs" -> q(t =>
-      Dedup.minhashDupPairs(t, minJaccard = 0.2, portable = true)),
-    "q35_simhash" -> q(t => Dedup.simhashFingerprints(t, portable = true)),
+      Dedup.minhashDupPairs(t, minJaccard = 0.2)),
+    "q35_simhash" -> q(t => Dedup.simhashFingerprints(t)),
     "q36_ngram_jaccard" -> q(Dedup.ngramJaccardSample),
-    "q45_dup_clusters" -> q(t => Dedup.dupClusters(t, minJaccard = 0.2, portable = true)),
+    "q45_dup_clusters" -> q(t => Dedup.dupClusters(t, minJaccard = 0.2)),
     "q37_ann_bruteforce" -> q(t => Similarity.bruteForceTopK(t)),
     "q38_ann_lsh" -> q(t => Similarity.lshBucketedTopK(t)),
     "q39_embedding_stats" -> q(Similarity.embeddingStats),
@@ -108,7 +107,7 @@ object SparkEntry {
     "q65_cube" -> q(Analytics.flagStatusCube),
     "q66_set_ops" -> q(Analytics.setOpsUsers),
     "q67_data_card" -> q(graft.ext.Sampling.dataCard),
-    "q68_dedup_corpus" -> q(t => Dedup.dedupedCorpus(t, minJaccard = 0.2, portable = true)),
+    "q68_dedup_corpus" -> q(t => Dedup.dedupedCorpus(t, minJaccard = 0.2)),
     "q69_sequence_packing" -> q(t => graft.ext.Sampling.packSequences(t)),
     "q70_mixture_weights" -> q(graft.ext.Sampling.mixtureWeights),
     "q71_quality_funnel" -> q(TextAnalysis.qualityFunnel),
@@ -126,7 +125,7 @@ object SparkEntry {
     "q83_bigram_lm" -> q(TextAnalysis.bigramFluency),
     "q84_duplicate_spans" -> q(t => Dedup.duplicateSpans(t)),
     "q85_cumulative_distinct" -> q(Analytics.cumulativeDistinctUsers),
-    "q86_cms_heavy_hitters" -> q(t => TextAnalysis.cmsHeavyHitters(t, portable = true)),
+    "q86_cms_heavy_hitters" -> q(t => TextAnalysis.cmsHeavyHitters(t)),
     "q87_ranking_suite" -> q(Analytics.rankingSuite),
     "q88_semdedup" -> q(t => Similarity.semDedup(t)),
     "q89_salted_join" -> q(t => Analytics.saltedSelfAggJoin(t)),
@@ -139,9 +138,9 @@ object SparkEntry {
     "q96_gap_fill" -> q(Analytics.gapFillHourly),
     "q97_sliding_window" -> q(Serving.slidingWindowAgg),
     "q98_range_frame" -> q(Analytics.trailingHourActivity),
-    "q99_incremental_dedup" -> q(t => Dedup.incrementalDupPairs(t, portable = true)),
+    "q99_incremental_dedup" -> q(t => Dedup.incrementalDupPairs(t)),
     "q100_training_corpus" -> q(t =>
-      graft.ext.TrainingPipeline.trainingCorpus(t, portable = true)),
+      graft.ext.TrainingPipeline.trainingCorpus(t)),
     "q101_data_profile" -> q(Analytics.dataProfile),
     "q102_equidepth_histogram" -> q(t => Analytics.equiDepthHistogram(t)),
     "q103_referential_integrity" -> q(Analytics.referentialIntegrity),
@@ -170,7 +169,7 @@ object SparkEntry {
     "q125_snapshot_diff" -> q(t => graft.sources.Snapshots.diffDemoOrders(t)),
     "q126_compaction_report" -> q(t => graft.sources.TableIO.compactionReportDemo(t)),
     "q127_incremental_dedup_served" -> q(t =>
-      Dedup.incrementalDupPairsServedDemo(t, portable = true)),
+      Dedup.incrementalDupPairsServedDemo(t)),
     "q128_append_evolution" -> q(t => graft.sources.TableIO.appendEvolutionDemo(t)),
     "q129_partition_refresh" -> q(t => graft.sources.TableIO.refreshPartitionsDemo(t)),
     "q130_ctas" -> q(t => graft.sources.TableIO.ctasDemo(t)),
@@ -321,9 +320,9 @@ object SparkEntry {
        |GROUP BY 1, 2 ORDER BY year DESC, month DESC""".stripMargin
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Round 2: the sketch/LSH/ANN family runs in
-    * portable-arithmetic mode (see [[SketchOracleSql]]) so EVERY query has
-    * an oracle entry — nothing is rows-only anymore. */
+    * the same parquet tables. The sketch/LSH/ANN family hashes with
+    * portable arithmetic (see [[SketchOracleSql]]), so EVERY query has an
+    * oracle entry — nothing is rows-only. */
   def oracleSql: Map[String, String] = Map(
     "q112_topk_per_group" -> Sampling.topDocsPerSourceSql(),
     "q113_zorder_layout" -> graft.sources.Layout.zOrderPreviewSql,

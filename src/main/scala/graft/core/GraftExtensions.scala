@@ -25,7 +25,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     import graft.functions._
     inject(ext, "graft_cosine_similarity", classOf[CosineSimilarity])(
       exprs => CosineSimilarity(exprs(0), exprs(1)))
-    inject(ext, "graft_simhash", classOf[SimHash])(exprs => SimHash(exprs.head))
+    inject(ext, SimHashExpression.fnName, classOf[SimHash])(SimHashExpression.build)
     inject(ext, "graft_token_counts", classOf[TokenCounts])(
       exprs => TokenCounts(exprs.head))
     inject(ext, "graft_word_shingles", classOf[WordShingles])(
@@ -37,12 +37,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       exprs => BitmapDistinct.BitmapStateAgg(exprs.head))
     inject(ext, "graft_bitmap_merge_count", classOf[BitmapDistinct.BitmapMergeCountAgg])(
       exprs => BitmapDistinct.BitmapMergeCountAgg(exprs.head))
-    inject(ext, "graft_cms_sketch", classOf[CountMinSketch.CmsAgg])(
-      exprs => CountMinSketch.CmsAgg(exprs.head,
-        exprs.lift(1).exists(_.eval().asInstanceOf[Boolean])))
-    inject(ext, "graft_cms_key_hash", classOf[CountMinSketch.CmsKeyHash])(
-      exprs => CountMinSketch.CmsKeyHash(exprs.head,
-        exprs.lift(1).exists(_.eval().asInstanceOf[Boolean])))
+    inject(ext, CountMinSketch.aggFnName, classOf[CountMinSketch.CmsAgg])(
+      CountMinSketch.buildSketch)
+    inject(ext, CountMinSketch.hashFnName, classOf[CountMinSketch.CmsKeyHash])(
+      CountMinSketch.buildKeyHash)
     inject(ext, "graft_gram_matrix", classOf[GramMatrix.GramAgg])(
       exprs => GramMatrix.GramAgg(exprs.head,
         exprs(1).eval().asInstanceOf[Number].intValue()))

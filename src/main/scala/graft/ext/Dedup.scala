@@ -24,7 +24,9 @@ import org.apache.spark.sql.functions._
   *    [[Sampling.splitHash]], so the DuckDB oracle replays capping exactly;
   *  - SimHash is a single narrow projection producing a 64-bit fingerprint;
   *    near-dup candidates are found by banding the fingerprint bytes.
-  * All hashing is xxhash64-based (codegen'd), deterministic across runs.
+  * Every sketch hash is [[graft.functions.PortableHash]]'s polynomial
+  * fold: deterministic across runs, and replayed exactly by the DuckDB
+  * oracle ([[graft.SketchOracleSql]]).
   */
 object Dedup {
 
@@ -51,71 +53,39 @@ object Dedup {
           i => array_join(slice(tks, i + 1, lit(k)), " ")))
   }
 
-  // k=32 permutations h_j(x) = (a_j * x32 + b_j) mod p over 32-bit folded
-  // xxhash64 values; a_j < 2^29 keeps a*x in 61 bits (no overflow).
-  // Constants shared with the native expression — single source of truth.
-  private val prime = 4294967311L // smallest prime > 2^32
-  private val perms: Seq[(Long, Long)] = graft.functions.MinHashExpression.permPairs
-
-  /** MinHash signature (array of 32 longs) of the shingle set. Narrow,
-    * codegen'd column expression — no shuffle, no UDF.
-    *
-    * Single-pass fold: each shingle is xxhash64'd ONCE and then updates all
-    * 32 permutation minima. The naive form — 32 × array_min(transform(...))
-    * — inlines the shingle-hashing subexpression into every permutation
-    * (Catalyst collapses projections), re-hashing every shingle 32×; that
-    * was ~90% of the whole bench suite's runtime before this shape. */
-  def minhashSignature(text: Column, k: Int = 3): Column = {
-    val hashed = transform(shingles(text, k), s => pmod(xxhash64(s), lit(4294967296L)))
-    val aArr = array(perms.map(p => lit(p._1)): _*)
-    val bArr = array(perms.map(p => lit(p._2)): _*)
-    aggregate(
-      hashed,
-      array_repeat(lit(prime), 32),
-      (acc, h) =>
-        zip_with(
-          acc,
-          sequence(lit(0), lit(31)),
-          (m, i) => least(m, pmod(h * get(aArr, i) + get(bArr, i), lit(prime)))))
-  }
-
-  /** Native-expression signature path (same values as [[minhashSignature]],
-    * asserted in tests; ~10× faster — see
-    * [[graft.functions.MinHashExpression]]). `portable = true` swaps the
-    * shingle hash for [[graft.functions.PortableHash]] so the DuckDB oracle
-    * can replay the signatures (permutation arithmetic unchanged). */
-  private def nativeSig(t: Tables, portable: Boolean = false): Column = {
+  /** Native MinHash signature of the document's word 3-shingles — see
+    * [[graft.functions.MinHashExpression]]. */
+  private def nativeSig(t: Tables): Column = {
     graft.functions.MinHashExpression.register(t.spark)
-    graft.functions.MinHashExpression.minhashSig(TextAnalysis.tokens(col("text")), portable)
+    graft.functions.MinHashExpression.minhashSig(TextAnalysis.tokens(col("text")))
   }
 
-  /** Portable fold of a long array into one 30-bit value — engine-portable
-    * stand-in for xxhash64 over the signature (same shape as
+  /** Portable fold of a long array into one 30-bit value — the signature
+    * and band hash (same shape as
     * [[graft.functions.PortableHash.foldLongsSql]]). */
   private def foldLongs(arr: Column): Column =
     aggregate(arr, lit(0L), (acc, x) => pmod(acc * lit(131L) + x, lit(1000000007L)))
 
   /** Per-document MinHash signature summary: always non-empty, used as the
     * verifiable surface of the MinHash path (signatures are deterministic). */
-  def minhashSignatures(t: Tables, portable: Boolean = false): DataFrame =
+  def minhashSignatures(t: Tables): DataFrame =
     t.documents
-      .select(col("doc_id"), nativeSig(t, portable).as("sig"))
+      .select(col("doc_id"), nativeSig(t).as("sig"))
       .select(
         col("doc_id"),
-        (if (portable) foldLongs(col("sig"))
-         else xxhash64(concat_ws(",", col("sig")))).as("sig_hash"),
+        foldLongs(col("sig")).as("sig_hash"),
         element_at(col("sig"), 1).as("minhash_0"),
         element_at(col("sig"), 32).as("minhash_31"))
       .orderBy(col("doc_id"))
 
   /** LSH banding: 8 bands × 4 rows. Emits (band_id, bucket, doc_id) — the
-    * only thing that ever shuffles in the MinHash plan. Portable mode folds
-    * the band slice with engine-portable arithmetic (band_id enters the
-    * fold seed so equal slices in different bands stay distinct). */
-  def lshBuckets(t: Tables, bands: Int = 8, portable: Boolean = false): DataFrame =
+    * only thing that ever shuffles in the MinHash plan. Each band slice is
+    * folded with [[foldLongs]] (band_id enters the fold seed so equal
+    * slices in different bands stay distinct). */
+  def lshBuckets(t: Tables, bands: Int = 8): DataFrame =
     t.documents
-      .select(col("doc_id"), nativeSig(t, portable).as("sig"))
-      .select(col("doc_id"), posexplode(bandedBuckets(col("sig"), portable, bands)))
+      .select(col("doc_id"), nativeSig(t).as("sig"))
+      .select(col("doc_id"), posexplode(bandedBuckets(col("sig"), bands)))
       .withColumnRenamed("pos", "band_id")
       .withColumnRenamed("col", "bucket")
       .select(col("band_id"), col("bucket"), col("doc_id"))
@@ -171,11 +141,11 @@ object Dedup {
     * earlier ones, so the corpus is scanned once per rebuild. Contract: a
     * fixture dir is write-once within a session (all specs use fresh temp
     * dirs). */
-  private def lshCandidateArtifacts(t: Tables, portable: Boolean,
-                                    cap: Int): (DataFrame, DataFrame, DataFrame) = {
+  private def lshCandidateArtifacts(
+      t: Tables, cap: Int): (DataFrame, DataFrame, DataFrame) = {
     import graft.sources.ArtifactTables
     val spark = t.spark
-    val ident = Seq(t.dir, s"portable=$portable", s"cap=$cap")
+    val ident = Seq(t.dir, s"cap=$cap")
     val prefix = s"graft_lshcand_${ArtifactTables.tag(ident: _*)}"
     val names = Seq(s"${prefix}_buckets", s"${prefix}_cands",
       s"${prefix}_shingles")
@@ -183,7 +153,7 @@ object Dedup {
       // the signature pass feeds the size aggregate AND the salted join —
       // checkpointed for the build only, freed with the frame
       saltedBuckets(
-        lshBuckets(t, portable = portable).localCheckpoint(),
+        lshBuckets(t).localCheckpoint(),
         Seq("band_id", "bucket"), "doc_id", cap)
         .write.format("parquet").option("compression", "zstd")
         .bucketBy(8, "band_id", "bucket")
@@ -217,9 +187,8 @@ object Dedup {
   }
 
   private[ext] def minhashDupPairsUnsorted(t: Tables, minJaccard: Double = 0.5,
-                                      portable: Boolean = false,
                                       cap: Int = DefaultBucketCap): DataFrame = {
-    val (_, candidates, docs) = lshCandidateArtifacts(t, portable, cap)
+    val (_, candidates, docs) = lshCandidateArtifacts(t, cap)
     candidates
       .join(docs.as("da"), col("doc_a") === col("da.doc_id"))
       .join(docs.as("db"), col("doc_b") === col("db.doc_id"))
@@ -237,39 +206,19 @@ object Dedup {
     * surface. Internal consumers ([[dupClusters]]) take the unsorted edge
     * set: a global range sort feeding a shuffling consumer is pure waste. */
   def minhashDupPairs(t: Tables, minJaccard: Double = 0.5,
-                      portable: Boolean = false,
                       cap: Int = DefaultBucketCap): DataFrame =
-    minhashDupPairsUnsorted(t, minJaccard, portable, cap)
+    minhashDupPairsUnsorted(t, minJaccard, cap)
       .orderBy(col("doc_a"), col("doc_b"))
 
-  /** SimHash: 64-bit fingerprint — per token, each bit of xxhash64(token)
-    * votes +1/−1; the sign of each bit-sum forms the fingerprint. Pure
-    * narrow expression via aggregate/zip_with (one pass over tokens).
-    * Written as a SQL higher-order-function expression because the Scala
-    * `shiftleft`/`shiftright` wrappers only accept literal shift amounts,
-    * while the lambda-bound bit index is a column. Expects a string array
-    * column named `tks`. */
-  private[graft] val simhashSql: String =
-    """aggregate(
-      |  zip_with(
-      |    aggregate(tks, array_repeat(0, 64),
-      |      (acc, tk) -> zip_with(acc,
-      |        transform(sequence(0, 63),
-      |          b -> CASE WHEN (shiftright(xxhash64(tk), b) & 1L) = 1L THEN 1 ELSE -1 END),
-      |        (x, y) -> x + y)),
-      |    sequence(0, 63),
-      |    (v, b) -> CASE WHEN v > 0 THEN shiftleft(1L, b) ELSE 0L END),
-      |  0L, (acc, x) -> acc | x)""".stripMargin
-
   /** Per-document SimHash fingerprints (hex) with a 16-bit band prefix used
-    * for near-dup bucketing. Native compiled kernel; [[simhashSql]] is the
-    * composable reference form (equality asserted in tests). */
-  def simhashFingerprints(t: Tables, portable: Boolean = false): DataFrame = {
+    * for near-dup bucketing — the native
+    * [[graft.functions.SimHashExpression]] kernel. */
+  def simhashFingerprints(t: Tables): DataFrame = {
     graft.functions.SimHashExpression.register(t.spark)
     t.documents
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("tks"))
       .select(col("doc_id"),
-        graft.functions.SimHashExpression.simhash(col("tks"), portable).as("simhash"))
+        graft.functions.SimHashExpression.simhash(col("tks")).as("simhash"))
       .select(
         col("doc_id"),
         col("simhash"),
@@ -494,10 +443,9 @@ object Dedup {
     * exposure on the default path. [[connectedComponents]] remains the
     * semantic reference (equality asserted across random graphs in
     * DedupSpec). */
-  def dupClusters(t: Tables, minJaccard: Double = 0.2,
-                  portable: Boolean = false): DataFrame = {
+  def dupClusters(t: Tables, minJaccard: Double = 0.2): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val pairs = minhashDupPairsUnsorted(t, minJaccard, portable)
+    val pairs = minhashDupPairsUnsorted(t, minJaccard)
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
     val labels = connectedComponentsStar(
       t.documents.select(col("doc_id").as("id")), pairs,
@@ -525,7 +473,7 @@ object Dedup {
     * the number of DISTINCT sizes (≪ corpus), with a broadcast 1-row total
     * for the share column. */
   def duplicationProfile(t: Tables, minJaccard: Double = 0.2): DataFrame = {
-    val clusters = dupClusters(t, minJaccard, portable = true)
+    val clusters = dupClusters(t, minJaccard)
     val tot = t.documents.agg(count(lit(1)).as("n_docs_total"))
     clusters
       .groupBy(col("cluster_id"), col("cluster_size"))
@@ -563,7 +511,7 @@ object Dedup {
     * purity roll-up is two aggregates over the label frame (cluster- then
     * band-keyed), both corpus-linear and map-side combinable. */
   def clusterPurity(t: Tables, minJaccard: Double = 0.2): DataFrame = {
-    val cl = dupClusters(t, minJaccard, portable = true)
+    val cl = dupClusters(t, minJaccard)
     val perCluster = cl
       .join(t.documents.select(col("doc_id"), col("source")), Seq("doc_id"))
       .groupBy(col("cluster_id"), col("cluster_size"), col("source"))
@@ -601,7 +549,7 @@ object Dedup {
                       minJaccard: Double = 0.2): DataFrame = {
     import graft.ext.Sampling.{splitColumn, splitHash}
     graft.functions.TopKAgg.register(t.spark)
-    val pairs = minhashDupPairsUnsorted(t, minJaccard, portable = true)
+    val pairs = minhashDupPairsUnsorted(t, minJaccard)
     val leaked = pairs
       .select(explode(array(
         struct(col("doc_a").as("d"), col("doc_b").as("o")),
@@ -628,9 +576,8 @@ object Dedup {
     * what the canonical row absorbed, the number every dedup report
     * publishes. The filter is cluster_id == doc_id — no extra shuffle
     * beyond the clustering itself. */
-  def dedupedCorpus(t: Tables, minJaccard: Double = 0.2,
-                    portable: Boolean = false): DataFrame =
-    dupClusters(t, minJaccard, portable)
+  def dedupedCorpus(t: Tables, minJaccard: Double = 0.2): DataFrame =
+    dupClusters(t, minJaccard)
       .filter(col("cluster_id") === col("doc_id"))
       .select(col("doc_id"), (col("cluster_size") - 1).as("n_dropped"))
       .orderBy(col("doc_id"))
@@ -644,10 +591,9 @@ object Dedup {
     * already keyed by doc_id) and a row_number pick per cluster — the
     * selection adds one exchange on cluster_id to the clustering itself,
     * independent of the ranking rule's complexity. */
-  def dedupKeepBest(t: Tables, minJaccard: Double = 0.2,
-                    portable: Boolean = false): DataFrame = {
+  def dedupKeepBest(t: Tables, minJaccard: Double = 0.2): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val ranked = dupClusters(t, minJaccard, portable)
+    val ranked = dupClusters(t, minJaccard)
       .join(t.documents.select(col("doc_id"), col("n_chars")), Seq("doc_id"))
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("cluster_id"))
@@ -673,7 +619,7 @@ object Dedup {
     * recall measures band + salt-cap loss. */
   def dedupEval(t: Tables, tau: Double = 0.2, sliceN: Int = 64,
                 cap: Int = DefaultBucketCap): DataFrame = {
-    val (_, candidates, _) = lshCandidateArtifacts(t, portable = true, cap)
+    val (_, candidates, _) = lshCandidateArtifacts(t, cap)
     graft.functions.ShingleExpression.register(t.spark)
     val sets = t.documents.select(col("doc_id"), array_distinct(
       graft.functions.ShingleExpression.wordShingles(
@@ -737,8 +683,7 @@ object Dedup {
     * decontamination benchmark subset); production calls pass two real
     * tables through the same body. Verification computes exact Jaccard on
     * the candidate pairs only. */
-  def incrementalDupPairs(t: Tables, minJaccard: Double = 0.2,
-                          portable: Boolean = false, split: Int = 20,
+  def incrementalDupPairs(t: Tables, minJaccard: Double = 0.2, split: Int = 20,
                           cap: Int = DefaultBucketCap): DataFrame = {
     // salt over the UNION of both corpora, then split: both sides see the
     // same ⌈n/cap⌉ for a bucket, so the cross join partitions cleanly by
@@ -746,7 +691,7 @@ object Dedup {
     // never emits, losing whole salt classes instead of the documented
     // cross-salt recall inside oversized buckets)
     val salted = saltedBuckets(
-      lshBuckets(t, portable = portable).localCheckpoint(),
+      lshBuckets(t).localCheckpoint(),
       Seq("band_id", "bucket"), "doc_id", cap)
       .localCheckpoint()
     val existing = salted.filter(pmod(col("doc_id"), lit(split)) === 0)
@@ -785,9 +730,8 @@ object Dedup {
     * the stored side) — plus the per-bucket sizes the joint salting needs.
     * `nBuckets` sizes the physical bucketing (≈ index rows / target
     * partition size at scale). */
-  def writeLshIndex(t: Tables, prefix: String, portable: Boolean = false,
-                    nBuckets: Int = 8): Unit = {
-    val b = lshBuckets(t, portable = portable)
+  def writeLshIndex(t: Tables, prefix: String, nBuckets: Int = 8): Unit = {
+    val b = lshBuckets(t)
     graft.sources.TableIO.dropTableAndLocation(t.spark, s"${prefix}_buckets")
     b.write.format("parquet").option("compression", "zstd")
       .bucketBy(nBuckets, "band_id", "bucket")
@@ -812,16 +756,15 @@ object Dedup {
     * semi-joined out of it). */
   def incrementalDupPairsServed(incoming: DataFrame, corpus: DataFrame,
                                 prefix: String, minJaccard: Double = 0.2,
-                                portable: Boolean = false,
                                 cap: Int = DefaultBucketCap): DataFrame = {
     val spark = incoming.sparkSession
     graft.functions.MinHashExpression.register(spark)
     graft.functions.ShingleExpression.register(spark)
     val sig = graft.functions.MinHashExpression
-      .minhashSig(TextAnalysis.tokens(col("text")), portable)
+      .minhashSig(TextAnalysis.tokens(col("text")))
     val incomingBuckets = incoming
       .select(col("doc_id"), sig.as("sig"))
-      .select(col("doc_id"), posexplode(bandedBuckets(col("sig"), portable)))
+      .select(col("doc_id"), posexplode(bandedBuckets(col("sig"))))
       .withColumnRenamed("pos", "band_id")
       .withColumnRenamed("col", "bucket")
       .select(col("band_id"), col("bucket"), col("doc_id"))
@@ -884,35 +827,31 @@ object Dedup {
     * so q99's DuckDB oracle replays this path too, and the index
     * round-trip (write → bucketed read → co-located join) is under the
     * hash gate, not just specs. */
-  def incrementalDupPairsServedDemo(t: Tables, minJaccard: Double = 0.2,
-                                    portable: Boolean = false, split: Int = 20,
+  def incrementalDupPairsServedDemo(t: Tables, minJaccard: Double = 0.2, split: Int = 20,
                                     cap: Int = DefaultBucketCap): DataFrame = {
     val spark = t.spark
-    val tag = ((t.dir, portable, split).hashCode & 0x7fffffff).toHexString
+    val tag = ((t.dir, split).hashCode & 0x7fffffff).toHexString
     val prefix = s"graft_lshidx_$tag"
     val key = s"${System.identityHashCode(spark.sessionState)}:$prefix"
     val corpus = t.documents.filter(pmod(col("doc_id"), lit(split)) === 0)
     if (servedIdxBuilt.add(key) || !spark.catalog.tableExists(s"${prefix}_buckets")) {
       val dir = java.nio.file.Files.createTempDirectory("graft_lsh_corpus").toString
       corpus.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      writeLshIndex(Tables(spark, dir), prefix, portable)
+      writeLshIndex(Tables(spark, dir), prefix)
       servedIdxBuilt.add(key)
     }
     val incoming = t.documents.filter(pmod(col("doc_id"), lit(split)) =!= 0)
-    incrementalDupPairsServed(incoming, corpus, prefix, minJaccard, portable, cap)
+    incrementalDupPairsServed(incoming, corpus, prefix, minJaccard, cap)
   }
 
   /** The shared band-fold: 8 bands × 4 rows over a signature column —
     * factored from [[lshBuckets]] so the served path banding cannot
     * drift. */
-  private def bandedBuckets(sig: Column, portable: Boolean,
-                            bands: Int = 8): Column = {
+  private def bandedBuckets(sig: Column, bands: Int = 8): Column = {
     val rows = 32 / bands
     transform(
       sequence(lit(0), lit(bands - 1)),
-      b =>
-        if (portable) foldLongs(concat(array(b.cast("long")), slice(sig, b * rows + 1, lit(rows))))
-        else xxhash64(concat_ws(",", slice(sig, b * rows + 1, lit(rows))), b))
+      b => foldLongs(concat(array(b.cast("long")), slice(sig, b * rows + 1, lit(rows)))))
   }
 
   /** Exact duplicate-span detection (the substring half of training-data
@@ -1547,7 +1486,7 @@ object Dedup {
     import graft.ext.Sampling.splitColumn
     def rk(s: Column): Column =
       when(s === "train", 0).when(s === "val", 1).otherwise(2)
-    val pairs = minhashDupPairsUnsorted(t, minJaccard, portable = true)
+    val pairs = minhashDupPairsUnsorted(t, minJaccard)
       .select(col("doc_a"), col("doc_b"),
         splitColumn(col("doc_a")).as("spa"),
         splitColumn(col("doc_b")).as("spb"))
@@ -1589,10 +1528,9 @@ object Dedup {
     * dim, the matrix aggregate on a |sources|²-bounded frame; pair share
     * via one window over that bounded frame. Sources are normalized to an
     * unordered pair (lexicographic least/greatest). */
-  def crossSourceDupMatrix(t: Tables, minJaccard: Double = 0.2,
-      portable: Boolean = true): DataFrame = {
+  def crossSourceDupMatrix(t: Tables, minJaccard: Double = 0.2): DataFrame = {
     val src = t.documents.select(col("doc_id"), col("source"))
-    val pairs = minhashDupPairsUnsorted(t, minJaccard, portable)
+    val pairs = minhashDupPairsUnsorted(t, minJaccard)
       .join(broadcast(src.as("sa")), col("doc_a") === col("sa.doc_id"))
       .join(broadcast(src.as("sb")), col("doc_b") === col("sb.doc_id"))
       .select(
@@ -1625,9 +1563,8 @@ object Dedup {
     * cap-bounded) → one broadcast-free semi-count against the canonical
     * pair set → a single summary row. All counting integer; the
     * coefficient is one exact-operand division. */
-  def dupGraphTransitivity(t: Tables, minJaccard: Double = 0.2,
-      portable: Boolean = true): DataFrame = {
-    val pairs = minhashDupPairsUnsorted(t, minJaccard, portable)
+  def dupGraphTransitivity(t: Tables, minJaccard: Double = 0.2): DataFrame = {
+    val pairs = minhashDupPairsUnsorted(t, minJaccard)
       .select(col("doc_a"), col("doc_b"))
       .localCheckpoint() // read three times: edges both ways + closure probe
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
@@ -1663,7 +1600,7 @@ object Dedup {
     * Scale: both inputs are the salt-capped O(cap·n) pair generators; the
     * full-outer join keys on the pair ids — no new quadratic stage. */
   def dupSignalAgreement(t: Tables): DataFrame = {
-    val lex = minhashDupPairsUnsorted(t, minJaccard = 0.2, portable = true)
+    val lex = minhashDupPairsUnsorted(t, minJaccard = 0.2)
       .select(col("doc_a").as("a"), col("doc_b").as("b"), lit(1L).as("lex"))
     val sem = embeddingNearDups(t)
       .select(col("vec_a").as("a"), col("vec_b").as("b"), lit(1L).as("sem"))

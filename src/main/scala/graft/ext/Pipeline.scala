@@ -27,9 +27,8 @@ import org.apache.spark.sql.functions._
   * so the composition order is a cost choice, not a semantic one. */
 object TrainingPipeline {
 
-  def trainingCorpus(t: Tables, minJaccard: Double = 0.2,
-                     portable: Boolean = false): DataFrame = {
-    val survivors = Dedup.dedupedCorpus(t, minJaccard, portable)
+  def trainingCorpus(t: Tables, minJaccard: Double = 0.2): DataFrame = {
+    val survivors = Dedup.dedupedCorpus(t, minJaccard)
       .select(col("doc_id"))
     t.documents
       .join(survivors, Seq("doc_id"), "left_semi")

@@ -659,7 +659,7 @@ object Sampling {
       .select(col("doc_id"), (col("lang") === targetLang).as("is_target"),
         explode(tks).as("tok"))
       .groupBy(col("doc_id"), col("is_target"),
-        pmod(keyHash(col("tok"), portable = true), lit(b)).as("bucket"))
+        pmod(keyHash(col("tok")), lit(b)).as("bucket"))
       .agg(count(lit(1)).as("c"))
       .localCheckpoint() // reused: model estimate + scoring pass
     val w = Window.partitionBy()

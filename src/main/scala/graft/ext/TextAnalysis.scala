@@ -33,8 +33,8 @@ object TextAnalysis {
     * arithmetic bit-replayable in DuckDB (libm exp is not guaranteed
     * correctly-rounded across engines; +, *, / are IEEE-exact).
     *
-    * Hashing rides [[graft.functions.CountMinSketch.keyHash]]'s portable
-    * mode ([[graft.functions.PortableHash.hash32]]) so the oracle replays
+    * Hashing rides [[graft.functions.CountMinSketch.keyHash]]
+    * ([[graft.functions.PortableHash.hash32]]) so the oracle replays
     * every bucket id. */
   def qualityClassifier(t: Tables, buckets: Int = 4096,
                         threshold: Double = 0.0): DataFrame = {
@@ -45,7 +45,7 @@ object TextAnalysis {
       ((pmod(h, lit(buckets.toLong)) * lit(2654435761L) + lit(104729L)) % lit(1000003L))
         .cast("double") / lit(1000003.0) - lit(0.5)
     val wsum = aggregate(
-      transform(tks, tok => weightOf(keyHash(tok, portable = true))),
+      transform(tks, tok => weightOf(keyHash(tok))),
       lit(0.0), (acc, w) => acc + w)
     t.documents
       .select(
@@ -799,20 +799,20 @@ object TextAnalysis {
     * 100 TB the exact aggregate's shuffle grows with the distinct-bigram
     * count (billions), while the sketch ships 64 KiB per map partition
     * no matter what; frequency probes then run against the broadcast
-    * counter matrix. Portable mode makes every counter replayable by the
-    * DuckDB oracle ([[graft.functions.CountMinSketch]] lane constants are
+    * counter matrix. The portable key hash makes every counter replayable
+    * by the DuckDB oracle ([[graft.functions.CountMinSketch]] lane constants are
     * explicit literals). Estimates are ≥ the true count by construction —
     * `overestimate` is the audit column. */
-  def cmsHeavyHitters(t: Tables, k: Int = 100, portable: Boolean = false): DataFrame = {
+  def cmsHeavyHitters(t: Tables, k: Int = 100): DataFrame = {
     graft.functions.CountMinSketch.register(t.spark)
     val state = bigramOccurrences(t)
-      .agg(graft.functions.CountMinSketch.cmsSketch(col("bigram"), portable).as("state"))
+      .agg(graft.functions.CountMinSketch.cmsSketch(col("bigram")).as("state"))
     frequentBigrams(t, k)
       .crossJoin(broadcast(state))
       .withColumn("cms_estimate",
         graft.functions.CountMinSketch.estimate(
           col("state"),
-          graft.functions.CountMinSketch.keyHash(col("bigram"), portable)))
+          graft.functions.CountMinSketch.keyHash(col("bigram"))))
       .select(
         col("bigram"), col("n_occurrences"), col("n_docs"),
         col("cms_estimate"),
@@ -1185,7 +1185,7 @@ object TextAnalysis {
         (pmod(Sampling.splitHash(col("doc_id")), lit(2L)) === 0).as("v1"),
         explode(tokens(lower(col("text")))).as("tok"))
       .groupBy(col("source"),
-        pmod(keyHash(col("tok"), portable = true), lit(buckets.toLong))
+        pmod(keyHash(col("tok")), lit(buckets.toLong))
           .as("bucket"))
       .agg(
         sum(when(col("v1"), 1L).otherwise(0L)).as("c1"),

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggreg
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -27,11 +27,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * top-k remains the small-SF gold standard; the sketch is what survives
   * 100 TB.
   *
-  * Hashing contract mirrors the KMV/MinHash family: production mode
-  * reduces xxhash64 into the permutation domain; portable mode uses
-  * [[PortableHash.hash32]] so a SQL engine can replay every counter —
-  * the lane constants are explicit literals, embedded in the DuckDB
-  * oracle verbatim.
+  * Keys hash with [[PortableHash.hash32]], the MinHash shingle hash, so a
+  * SQL engine can replay every counter — the lane constants are explicit
+  * literals, embedded in the DuckDB oracle verbatim.
   */
 object CountMinSketch {
 
@@ -44,31 +42,21 @@ object CountMinSketch {
   val LaneA: Array[Long] = Array(236715711L, 430544759L, 18273701L, 506690487L)
   val LaneB: Array[Long] = Array(774497033L, 287514649L, 905031851L, 43569047L)
 
-  /** Key hash reduced into [0, P): the value both the sketch update and
-    * the probe side permute into lane buckets. */
-  private[functions] def reducedHash(key: UTF8String, portable: Boolean): Long =
-    if (portable) PortableHash.hash32(key)
-    else {
-      val x = org.apache.spark.sql.catalyst.expressions.XXH64
-        .hashUnsafeBytes(key.getBaseObject, key.getBaseOffset, key.numBytes, 42L)
-      java.lang.Math.floorMod(x, P)
-    }
-
   private def bucket(lane: Int, h: Long): Int =
     (((LaneA(lane) * h + LaneB(lane)) % P) % Width).toInt
 
   /** JVM-side update for custom-state consumers (streaming heavy hitters
     * hold the counter matrix in a GroupState buffer): identical arithmetic
     * to [[CmsAgg]], so estimates agree with the batch aggregate. */
-  def updateCounters(buf: Array[Long], key: String, portable: Boolean = false): Unit = {
-    val h = reducedHash(UTF8String.fromString(key), portable)
+  def updateCounters(buf: Array[Long], key: String): Unit = {
+    val h = PortableHash.hash32(UTF8String.fromString(key))
     var i = 0
     while (i < Depth) { buf(i * Width + bucket(i, h)) += 1L; i += 1 }
   }
 
   /** JVM-side point estimate over a counter matrix (min across lanes). */
-  def estimateCount(buf: Array[Long], key: String, portable: Boolean = false): Long = {
-    val h = reducedHash(UTF8String.fromString(key), portable)
+  def estimateCount(buf: Array[Long], key: String): Long = {
+    val h = PortableHash.hash32(UTF8String.fromString(key))
     var best = Long.MaxValue
     var i = 0
     while (i < Depth) {
@@ -85,7 +73,6 @@ object CountMinSketch {
     * broadcast of a materialized sketch row stays codegen-friendly. */
   case class CmsAgg(
       child: Expression,
-      portable: Boolean,
       override val mutableAggBufferOffset: Int = 0,
       override val inputAggBufferOffset: Int = 0)
     extends TypedImperativeAggregate[Array[Long]] with UnaryLike[Expression] {
@@ -105,7 +92,7 @@ object CountMinSketch {
     override def update(buffer: Array[Long], input: InternalRow): Array[Long] = {
       val v = child.eval(input)
       if (v != null) {
-        val h = reducedHash(v.asInstanceOf[UTF8String], portable)
+        val h = PortableHash.hash32(v.asInstanceOf[UTF8String])
         var i = 0
         while (i < Depth) { buffer(i * Width + bucket(i, h)) += 1L; i += 1 }
       }
@@ -143,10 +130,10 @@ object CountMinSketch {
   }
 
   /** Scalar twin of the sketch's internal key hash, for the probe side:
-    * the same reduced hash the aggregate permutes into buckets.
+    * the same [[PortableHash.hash32]] the aggregate permutes into buckets.
     * CodegenFallback — probes run over top-k candidate lists (hundreds of
     * rows), not the corpus. */
-  case class CmsKeyHash(child: Expression, portable: Boolean)
+  case class CmsKeyHash(child: Expression)
       extends UnaryExpression with CodegenFallback {
 
     override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -158,36 +145,32 @@ object CountMinSketch {
     override def dataType: DataType = LongType
 
     override def nullSafeEval(input: Any): Any =
-      reducedHash(input.asInstanceOf[UTF8String], portable)
+      PortableHash.hash32(input.asInstanceOf[UTF8String])
 
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
-  private val aggFnName = "graft_cms_sketch"
-  private val hashFnName = "graft_cms_key_hash"
+  private[graft] val aggFnName = "graft_cms_sketch"
+  private[graft] val hashFnName = "graft_cms_key_hash"
 
-  // The portable flag is an optional second argument on BOTH registration
-  // paths (here and GraftExtensions), defaulting to false — a one-argument
-  // SQL call must not die with an IndexOutOfBoundsException.
-  private def boolArg(exprs: Seq[Expression]): Boolean =
-    exprs.lift(1).exists(_.eval().asInstanceOf[Boolean])
+  /** SQL builders shared by [[register]] and [[graft.core.GraftExtensions]]. */
+  private[graft] def buildSketch(exprs: Seq[Expression]): Expression =
+    CmsAgg(PortableHash.oneArg(aggFnName, exprs))
+  private[graft] def buildKeyHash(exprs: Seq[Expression]): Expression =
+    CmsKeyHash(PortableHash.oneArg(hashFnName, exprs))
 
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      aggFnName, exprs => CmsAgg(exprs.head, boolArg(exprs)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      hashFnName, exprs => CmsKeyHash(exprs.head, boolArg(exprs)), "scala_udf")
+    reg.createOrReplaceTempFunction(aggFnName, buildSketch, "scala_udf")
+    reg.createOrReplaceTempFunction(hashFnName, buildKeyHash, "scala_udf")
   }
 
   /** CMS counter matrix (array<long>, lane-major) over a string key column.
     * Call [[register]] first. */
-  def cmsSketch(key: Column, portable: Boolean = false): Column =
-    call_function(aggFnName, key, lit(portable))
+  def cmsSketch(key: Column): Column = call_function(aggFnName, key)
 
-  /** The reduced key hash used by the sketch — combine with [[estimate]]. */
-  def keyHash(key: Column, portable: Boolean = false): Column =
-    call_function(hashFnName, key, lit(portable))
+  /** The key hash used by the sketch — combine with [[estimate]]. */
+  def keyHash(key: Column): Column = call_function(hashFnName, key)
 
   /** Point-frequency estimate: min over lanes of the counter each lane
     * hashes `keyHashCol` into. Pure built-in arithmetic (codegen'd). */

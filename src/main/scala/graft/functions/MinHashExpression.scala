@@ -2,32 +2,31 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native MinHash signature over a token array: word k-shingles → xxhash64
-  * → k-permutation minima, in ONE compiled eval loop.
+/** Native MinHash signature over a token array: word k-shingles →
+  * [[PortableHash.hash32]] → k-permutation minima, in ONE eval loop.
   *
-  * The composable form (transform/aggregate/zip_with over shingle arrays)
-  * is semantically identical but runs through Catalyst's interpreted
-  * higher-order-function machinery — HOFs are CodegenFallback, so every
-  * lambda application walks an expression tree per element; the fold was
-  * ~8M interpreted node evaluations per 5k documents. This expression is
-  * also CodegenFallback, but its eval is a straight Scala loop: shingle
-  * bytes are hashed once with Spark's own XxHash64 kernel (seed 42, the
-  * SQL `xxhash64` default — signatures match the composable form exactly)
-  * and all 32 permutation minima update in primitive long arithmetic.
+  * The shingle hash is the engine-portable polynomial fold, the only
+  * sketch hash in the library: any SQL engine can replay it, so the DuckDB
+  * oracle recomputes every signature (`SketchOracleSql`). A composable
+  * transform/aggregate/zip_with form would run through Catalyst's
+  * interpreted higher-order-function machinery — HOFs are
+  * CodegenFallback, so every lambda application walks an expression tree
+  * per element (~8M interpreted node evaluations per 5k documents). This
+  * expression is also CodegenFallback, but its eval is a straight Scala
+  * loop: each shingle is hashed once and all 32 permutation minima update
+  * in primitive long arithmetic.
   */
-case class MinHashSignature(child: Expression, k: Int, a: Array[Long], b: Array[Long],
-                            portable: Boolean = false)
+case class MinHashSignature(child: Expression, k: Int, a: Array[Long], b: Array[Long])
     extends UnaryExpression with CodegenFallback {
 
   private val prime = 4294967311L // smallest prime > 2^32
-  private val mod32 = 4294967296L
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
@@ -45,14 +44,7 @@ case class MinHashSignature(child: Expression, k: Int, a: Array[Long], b: Array[
     val sb = new java.lang.StringBuilder(64)
 
     def updateFromShingle(s: UTF8String): Unit = {
-      // portable mode swaps xxhash64 for the oracle-replayable polynomial
-      // hash (see PortableHash) — permutation arithmetic is unchanged
-      val h =
-        if (portable) PortableHash.hash32(s)
-        else {
-          val h64 = XxHash64Function.hash(s, StringType, 42L)
-          ((h64 % mod32) + mod32) % mod32
-        }
+      val h = PortableHash.hash32(s)
       var j = 0
       while (j < nPerm) {
         val v = (a(j) * h + b(j)) % prime
@@ -94,11 +86,10 @@ case class MinHashSignature(child: Expression, k: Int, a: Array[Long], b: Array[
 object MinHashExpression {
 
   private val fnName = "graft_minhash_sig"
-  private val fnNamePortable = "graft_minhash_sig_portable"
 
-  /** The single source of truth for the permutation constants — shared with
-    * the composable form in graft.ext.Dedup so the native/HOF parity
-    * contract cannot drift. */
+  /** The permutation constants h_j(x) = (a_j·x + b_j) mod p — shared with
+    * the DuckDB oracle replay (`SketchOracleSql`) and the reimplementation
+    * test, so the three cannot drift. a_j < 2^29 keeps a·x below 2^61. */
   val permPairs: Seq[(Long, Long)] = {
     val rnd = new scala.util.Random(42)
     Seq.fill(32)((rnd.nextInt((1 << 29) - 1).toLong + 1, rnd.nextInt(Int.MaxValue).toLong))
@@ -110,17 +101,10 @@ object MinHashExpression {
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       fnName,
-      exprs => MinHashSignature(exprs.head, 3, perms._1, perms._2),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnNamePortable,
-      exprs => MinHashSignature(exprs.head, 3, perms._1, perms._2, portable = true),
+      exprs => MinHashSignature(PortableHash.oneArg(fnName, exprs), 3, perms._1, perms._2),
       "scala_udf")
   }
 
-  /** MinHash signature (array of 32 longs) of a token-array column.
-    * `portable = true` hashes shingles with [[PortableHash.hash32]] instead
-    * of xxhash64, making signatures replayable by the DuckDB oracle. */
-  def minhashSig(tokens: Column, portable: Boolean = false): Column =
-    call_function(if (portable) fnNamePortable else fnName, tokens)
+  /** MinHash signature (array of 32 longs) of a token-array column. */
+  def minhashSig(tokens: Column): Column = call_function(fnName, tokens)
 }

@@ -8,25 +8,25 @@ import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Engine-portable polynomial string hashing.
+/** Engine-portable polynomial string hashing — the one hash family behind
+  * every sketch (MinHash, SimHash, Count-Min).
   *
-  * The production sketch path hashes with xxhash64 (fast, well-mixed, but
-  * Spark-only). For cross-engine verification — the driver's DuckDB oracle,
-  * or any downstream system that wants to recompute our fingerprints — we
-  * also support a *portable* mode: a left-fold polynomial hash over the
-  * string's code points, `acc = (acc * BASE + codePoint) mod P`, which any
-  * SQL engine can replay with a char split + fold (DuckDB:
-  * `list_reduce(list_transform(string_split(s,''), c -> unicode(c)), ...)`).
+  * A left-fold polynomial hash over the string's code points,
+  * `acc = (acc * BASE + codePoint) mod P`, which any SQL engine can replay
+  * with a char split + fold (DuckDB:
+  * `list_reduce(list_transform(string_split(s,''), c -> unicode(c)), ...)`),
+  * so the DuckDB oracle — or any downstream system that wants to recompute
+  * our fingerprints — reproduces every sketch value exactly.
   *
   * Contract notes:
   *  - all arithmetic stays below 2^62 so engines that error on int64
   *    overflow (DuckDB) evaluate it exactly;
   *  - defined over Unicode code points; for the ASCII corpora these tables
   *    carry, code points == bytes == chars in every engine;
-  *  - the polynomial fold is **not** a quality substitute for xxhash64 at
-  *    adversarial inputs, but for MinHash/SimHash sketching over natural
-  *    tokens its distribution is adequate (base 131 / Mersenne-ish moduli,
-  *    the classic Rabin-Karp family).
+  *  - the polynomial fold is not an adversarial-input-grade hash, but for
+  *    MinHash/SimHash sketching over natural tokens its distribution is
+  *    adequate (base 131 / Mersenne-ish moduli, the classic Rabin-Karp
+  *    family).
   */
 object PortableHash {
 
@@ -71,11 +71,11 @@ object PortableHash {
   }
 
   /** 30-bit polynomial hash (base 131 mod 1e9+7) — the MinHash shingle
-    * hash in portable mode. */
+    * hash and the Count-Min key hash. */
   def hash32(s: UTF8String): Long = fold(s, BaseA, P32)
 
   /** 62-bit token hash: two independent 31-bit polynomial lanes packed as
-    * `laneA << 31 | laneB` — the SimHash token hash in portable mode.
+    * `laneA << 31 | laneB` — the SimHash token hash.
     * Bits 62 and 63 are always zero (documented; SimHash bit-votes there
     * are uniformly -1, so fingerprint bits 62..63 are 0 in both engines). */
   def hash62(s: UTF8String): Long =
@@ -112,6 +112,16 @@ object PortableHash {
     s"list_reduce(list_prepend(CAST(0 AS BIGINT), $listExpr), (acc, x) -> (acc * $BaseA + x) % $P32)"
 
   private val hash62FnName = "graft_hash62"
+
+  /** The single argument of a one-argument SQL function call; any other
+    * arity is the analyzer's wrong-number-of-arguments error. */
+  private[graft] def oneArg(name: String, exprs: Seq[Expression]): Expression =
+    if (exprs.length == 1) exprs.head
+    else throw new org.apache.spark.sql.AnalysisException(
+      "WRONG_NUM_ARGS.WITHOUT_SUGGESTION", Map(
+        "functionName" -> s"`$name`", "expectedNum" -> "1",
+        "actualNum" -> exprs.length.toString,
+        "docroot" -> org.apache.spark.SPARK_DOC_ROOT))
 
   /** Register [[Hash62]] so [[hash62Col]] can plan it. */
   def registerHash62(spark: org.apache.spark.sql.SparkSession): Unit =

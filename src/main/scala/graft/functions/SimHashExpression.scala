@@ -2,20 +2,21 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Native SimHash over a token array: per token, each bit of
-  * xxhash64(token) votes ±1; the sign of each bit-sum forms the 64-bit
-  * fingerprint. One compiled eval loop — same reasoning as
-  * [[MinHashSignature]] (the SQL higher-order-function form walks an
-  * interpreted expression tree 64× per token). Values are bit-identical to
-  * the HOF form (same xxhash64 seed 42), asserted in tests.
+  * [[PortableHash.hash62]](token) votes ±1; the sign of each bit-sum forms
+  * the 64-bit fingerprint. One eval loop — same reasoning as
+  * [[MinHashSignature]] (a SQL higher-order-function form walks an
+  * interpreted expression tree 64× per token). The token hash has 62
+  * bits: bits 62..63 always vote -1, so those fingerprint bits are 0 —
+  * in the DuckDB oracle replay too.
   */
-case class SimHash(child: Expression, portable: Boolean = false)
+case class SimHash(child: Expression)
     extends UnaryExpression with CodegenFallback {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -32,11 +33,7 @@ case class SimHash(child: Expression, portable: Boolean = false)
     val votes = new Array[Int](64)
     var i = 0
     while (i < n) {
-      // portable mode: 62-bit oracle-replayable hash (bits 62..63 are zero
-      // by construction — those fingerprint bits come out 0 in both engines)
-      val h =
-        if (portable) PortableHash.hash62(tokens.getUTF8String(i))
-        else XxHash64Function.hash(tokens.getUTF8String(i), StringType, 42L)
+      val h = PortableHash.hash62(tokens.getUTF8String(i))
       var b = 0
       while (b < 64) {
         if (((h >> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
@@ -57,16 +54,15 @@ case class SimHash(child: Expression, portable: Boolean = false)
 }
 
 object SimHashExpression {
-  private val fnName = "graft_simhash"
-  private val fnNamePortable = "graft_simhash_portable"
+  private[graft] val fnName = "graft_simhash"
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnName, exprs => SimHash(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnNamePortable, exprs => SimHash(exprs.head, portable = true), "scala_udf")
-  }
+  /** The SQL builder shared by [[register]] and [[graft.core.GraftExtensions]]. */
+  private[graft] def build(exprs: Seq[Expression]): Expression =
+    SimHash(PortableHash.oneArg(fnName, exprs))
 
-  def simhash(tokens: Column, portable: Boolean = false): Column =
-    call_function(if (portable) fnNamePortable else fnName, tokens)
+  def register(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      fnName, build, "scala_udf")
+
+  def simhash(tokens: Column): Column = call_function(fnName, tokens)
 }

@@ -216,7 +216,7 @@ object ScaleDataGen {
     // `hotkey` (SURVEY §7 hard part 6, the JFK/Times-Square zone shape):
     // ~30% of ALL event rows collapse onto user_id 0 — the deliberately
     // skewed fixture the salted paths (q81/q89 machinery) are measured
-    // against in tools.SkewBench / SCALE.md. Deterministic and seedless:
+    // against (SCALE.md). Deterministic and seedless:
     // the row's own remapped event_id hashes to a percent bucket.
     val remappedUser = remap("user_id", userStride)
     val skewedUser =

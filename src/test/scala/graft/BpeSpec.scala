@@ -224,7 +224,7 @@ class BpeSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     // the raw fixture's 31-word vocabulary exhausts BPE at ~91 merges (the
     // correct outcome); the bigram derivation (vocab ≈ 31² words of ~10
-    // chars) is the >1k-merge regime BpeScaleRun pins at sf0.1. Here: the
+    // chars) is the >1k-merge regime of sf0.1 training. Here: the
     // wide batch must KEEP most of its budget — a regression in the
     // interaction filter (over-rejecting) would push the realistic run
     // from ~19 rounds toward one-merge-per-round economics.

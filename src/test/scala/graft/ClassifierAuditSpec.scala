@@ -294,7 +294,7 @@ class ClassifierAuditSpec extends SparkSpec {
     val srcs = t.documents.select(col("doc_id"), col("source")).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("source")).toMap
     val pairs = graft.ext.Dedup
-      .minhashDupPairs(t, minJaccard = 0.2, portable = true).collect()
+      .minhashDupPairs(t, minJaccard = 0.2).collect()
       .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b")))
     val expected = pairs.map { case (a, b) =>
       val (sa, sb) = (srcs(a), srcs(b))
@@ -316,7 +316,7 @@ class ClassifierAuditSpec extends SparkSpec {
   test("q236: wedge/closure recount from the q34 pairs") {
     val t = sf("sf0.01")
     val pairs = graft.ext.Dedup
-      .minhashDupPairs(t, minJaccard = 0.2, portable = true).collect()
+      .minhashDupPairs(t, minJaccard = 0.2).collect()
       .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b")))
     val pairSet = pairs.toSet
     val adj = (pairs ++ pairs.map(p => (p._2, p._1)))

@@ -222,7 +222,7 @@ class CorpusIndexSpec extends SparkSpec {
         r.getDouble(5))
     assert(nLex == nBoth + nLexOnly)
     assert(nSem == nBoth + nSemOnly)
-    val lexCount = Dedup.minhashDupPairs(t, minJaccard = 0.2, portable = true).count()
+    val lexCount = Dedup.minhashDupPairs(t, minJaccard = 0.2).count()
     val semCount = Dedup.embeddingNearDups(t).count()
     assert(nLex == lexCount)
     assert(nSem == semCount)

@@ -35,7 +35,7 @@ class CurationAuditSpec extends SparkSpec {
 
   test("q186: reconciles with q34's pair list relabeled single-node") {
     val t = sf()
-    val pairs = Dedup.minhashDupPairs(t, minJaccard = 0.2, portable = true)
+    val pairs = Dedup.minhashDupPairs(t, minJaccard = 0.2)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.nonEmpty, "fixture must produce near-dup pairs")
     val rk = Map("train" -> 0, "val" -> 1, "test" -> 2)
@@ -197,7 +197,7 @@ class CurationAuditSpec extends SparkSpec {
 
   test("q191: reconciles exactly with q45's cluster output") {
     val t = sf()
-    val clusters = Dedup.dupClusters(t, minJaccard = 0.2, portable = true)
+    val clusters = Dedup.dupClusters(t, minJaccard = 0.2)
       .collect().map(r => (r.getLong(1), r.getLong(2)))
     assert(clusters.nonEmpty, "fixture must produce dup clusters")
     // per size, the number of distinct clusters at that size
@@ -291,7 +291,7 @@ class CurationAuditSpec extends SparkSpec {
   test("q194: no sampled doc has a train near-dup; hash-order prefix exact") {
     val t = sf()
     val k = 16
-    val pairs = Dedup.minhashDupPairs(t, minJaccard = 0.2, portable = true)
+    val pairs = Dedup.minhashDupPairs(t, minJaccard = 0.2)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val leaked = pairs.flatMap { case (a, b) =>
       Seq((a, b), (b, a)).collect {

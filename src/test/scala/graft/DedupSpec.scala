@@ -71,16 +71,6 @@ class DedupSpec extends SparkSpec {
       s"planted neighbor not found: ${pairs.mkString(",")}")
   }
 
-  test("native MinHashSignature matches the composable HOF form exactly") {
-    val docs = sf().documents.limit(80)
-    graft.functions.MinHashExpression.register(spark)
-    val both = docs.select(
-      graft.functions.MinHashExpression.minhashSig(
-        TextAnalysis.tokens(col("text"))).as("native"),
-      Dedup.minhashSignature(col("text")).as("hof"))
-    assert(both.filter(not(col("native") <=> col("hof"))).count() == 0)
-  }
-
   test("IVF ANN finds the planted embedding neighbor") {
     val out = graft.ext.Similarity.ivfTopK(t, nQueries = 2, k = 3).collect()
     assert(out.count(_.getAs[Long]("query_id") == 0L) == 3)
@@ -110,13 +100,13 @@ class DedupSpec extends SparkSpec {
         |states AS (
         |  SELECT x % 2 AS g, graft_bitmap_state(x) AS bm,
         |   graft_bitmap_distinct(x) AS d,
-        |   graft_cms_sketch(CAST(x AS STRING), true) AS cms
+        |   graft_cms_sketch(CAST(x AS STRING)) AS cms
         |  FROM t GROUP BY x % 2)
         |SELECT graft_bitmap_merge_count(bm) m, CAST(sum(d) AS BIGINT) sd
         |FROM states""".stripMargin).collect()(0)
     assert(agg.getLong(0) == 3L && agg.getLong(1) == 3L)
     val scalars = s2.sql(
-      """SELECT graft_cms_key_hash('a b', true) h,
+      """SELECT graft_cms_key_hash('a b') h,
         | size(graft_word_shingles(array('a','b','c'), 2)) sh""".stripMargin).collect()(0)
     assert(scalars.getLong(0) == graft.functions.PortableHash.hash32(
       org.apache.spark.unsafe.types.UTF8String.fromString("a b")))
@@ -127,16 +117,6 @@ class DedupSpec extends SparkSpec {
         org.apache.spark.sql.SparkSession.setActiveSession(p)
       }
     }
-  }
-
-  test("native SimHash matches the composable HOF form exactly") {
-    graft.functions.SimHashExpression.register(spark)
-    val both = sf().documents.limit(80)
-      .select(TextAnalysis.tokens(col("text")).as("tks"))
-      .select(
-        graft.functions.SimHashExpression.simhash(col("tks")).as("native"),
-        expr(Dedup.simhashSql).as("hof"))
-    assert(both.filter(not(col("native") <=> col("hof"))).count() == 0)
   }
 
   test("bpe-ish tokenizer splits digits and punctuation") {
@@ -344,9 +324,9 @@ class DedupSpec extends SparkSpec {
 
   test("q127 served demo: index build-once + serve equals q99 on the same split") {
     val td = sf()
-    val demo = Dedup.incrementalDupPairsServedDemo(td, portable = true).collect()
+    val demo = Dedup.incrementalDupPairsServedDemo(td).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val q99 = Dedup.incrementalDupPairs(td, portable = true).collect()
+    val q99 = Dedup.incrementalDupPairs(td).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(demo.nonEmpty && demo == q99,
       s"demo=${demo.size} q99=${q99.size} diff=${demo.diff(q99).take(3)}")

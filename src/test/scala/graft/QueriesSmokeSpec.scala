@@ -602,8 +602,10 @@ class QueriesSmokeSpec extends SparkSpec {
   test("q160 keep-best: keeps each cluster's longest member (min-id tiebreak)") {
     val t = sf()
     val kept = SparkEntry.queries("q160_dedup_keep_best")(spark, dir).collect()
-    val clusters = graft.ext.Dedup.dupClusters(t).collect()
+    // q45's clusters, from the query registry: pins q160 to q45's hash
+    val clusters = SparkEntry.queries("q45_dup_clusters")(spark, dir).collect()
       .groupBy(_.getAs[Long]("cluster_id"))
+    assert(clusters.values.exists(_.length > 1), "fixture has no near-dup cluster")
     assert(kept.length == clusters.size)
     val chars = t.documents.select(col("doc_id"), col("n_chars")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap

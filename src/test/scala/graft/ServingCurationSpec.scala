@@ -73,7 +73,7 @@ class ServingCurationSpec extends SparkSpec {
 
   test("q205: purity replica over the cluster labels; singleton band is pure") {
     val t = sf("sf0.001")
-    val labels = Dedup.dupClusters(t, portable = true).collect()
+    val labels = Dedup.dupClusters(t).collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("cluster_id")))
     val srcOf = t.documents.select(col("doc_id"), col("source")).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("source")).toMap

@@ -5,8 +5,8 @@ import graft.functions.{KmvSketch, PortableHash}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The portable-arithmetic sketch layer: polynomial hashes, portable
-  * MinHash/SimHash modes, the KMV distinct sketch, and the native
+/** The portable-arithmetic sketch layer: polynomial hashes, the
+  * MinHash/SimHash/CMS kernels built on them, the KMV distinct sketch, and the native
   * TokenCounts expression. These are the pieces that make the sketch/ANN
   * queries oracle-checkable — the invariants here are (a) the portable
   * values match an independent reimplementation, (b) results are
@@ -52,7 +52,7 @@ class SketchPortableSpec extends SparkSpec {
     MinHashExpression.register(spark)
     val got = Seq(text).toDF("text")
       .select(MinHashExpression.minhashSig(
-        TextAnalysis.tokens(col("text")), portable = true).as("sig"))
+        TextAnalysis.tokens(col("text"))).as("sig"))
       .as[Seq[Long]].collect()(0)
     assert(got == expected)
   }
@@ -72,23 +72,45 @@ class SketchPortableSpec extends SparkSpec {
     SimHashExpression.register(spark)
     val got = Seq(text).toDF("text")
       .select(SimHashExpression.simhash(
-        TextAnalysis.tokens(col("text")), portable = true).as("fp"))
+        TextAnalysis.tokens(col("text"))).as("fp"))
       .as[Long].collect()(0)
     assert(got == expected)
   }
 
-  test("portable minhashDupPairs finds the same near-dups as the xx64 path") {
-    // the hash changes bucket values, not the verified-Jaccard semantics:
-    // both modes must agree on the final accepted pairs for real near-dups
+  test("sketch SQL names equal the Scala API, with register() and with GraftExtensions") {
+    import graft.functions.{CountMinSketch, SimHashExpression}
+    import org.apache.spark.sql.SparkSession
     val t = sf("sf0.001")
-    val px = Dedup.minhashDupPairs(t, minJaccard = 0.2).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val pp = Dedup.minhashDupPairs(t, minJaccard = 0.2, portable = true).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    // LSH recall differs per hash; require substantial overlap, identical
-    // Jaccard values on the intersection is implied by the shared verifier
-    assert((px intersect pp).size >= (px.size * 7) / 10,
-      s"xx64=${px.size} portable=${pp.size} common=${(px intersect pp).size}")
+    val q35 = Dedup.simhashFingerprints(t).limit(1).collect()(0)
+    val (docId, fp) = (q35.getAs[Long]("doc_id"), q35.getAs[Long]("simhash"))
+    val tks = t.documents.filter(col("doc_id") === docId)
+      .select(TextAnalysis.tokens(col("text"))).collect()(0).getSeq[String](0)
+    val key = UTF8String.fromString("a b")
+    SimHashExpression.register(spark)
+    CountMinSketch.register(spark)
+    import spark.implicits._
+    val api = Seq(tks).toDF("tks")
+      .select(SimHashExpression.simhash(col("tks")), CountMinSketch.keyHash(lit("a b")))
+      .collect()(0)
+    assert(api.getLong(0) == fp)
+    assert(api.getLong(1) == PortableHash.hash32(key))
+    def viaSql(s: SparkSession): (Long, Long) = {
+      s.createDataFrame(Seq(Tuple1(tks))).toDF("tks").createOrReplaceTempView("sketch_doc")
+      val r = s.sql("SELECT graft_simhash(tks), graft_cms_key_hash('a b') FROM sketch_doc")
+        .collect()(0)
+      (r.getLong(0), r.getLong(1))
+    }
+    assert(viaSql(spark) == (fp, PortableHash.hash32(key)))
+    // create(), not getOrCreate(): a fresh session over the shared context
+    // whose functions come from the extension injection alone
+    val prior = SparkSession.getDefaultSession
+    val ext = graft.core.GraftSession.builder("local[2]", 2)
+      .withExtensions(new graft.core.GraftExtensions).create()
+    try assert(viaSql(ext) == (fp, PortableHash.hash32(key)))
+    finally prior.foreach { p =>
+      SparkSession.setDefaultSession(p)
+      SparkSession.setActiveSession(p)
+    }
   }
 
   test("TokenCounts native expression equals the composable HOF form") {
@@ -219,34 +241,32 @@ class SketchPortableSpec extends SparkSpec {
   test("CMS estimates dominate exact counts, bounded, layout-independent") {
     import graft.functions.CountMinSketch
     val t = sf("sf0.001")
-    for (portable <- Seq(true, false)) {
-      val out = graft.ext.TextAnalysis.cmsHeavyHitters(t, k = 100, portable).collect()
-      assert(out.length == 100)
-      // one-sided error: every estimate >= exact count
-      out.foreach { r =>
-        assert(r.getAs[Long]("cms_estimate") >= r.getAs[Long]("n_occurrences"),
-          s"underestimate in ${r.getString(0)} (portable=$portable)")
-        assert(r.getAs[Long]("overestimate") ==
-          r.getAs[Long]("cms_estimate") - r.getAs[Long]("n_occurrences"))
-      }
-      // CMS bound: overestimate <= eps*N (N = total bigram occurrences,
-      // eps ~ e/width), checked at 4x slack so corpus wiggle can't flake
-      val n = t.documents
-        .select(greatest(
-          size(graft.ext.TextAnalysis.tokens(lower(col("text")))) - 1, lit(0))
-          .cast("long").as("nb"))
-        .agg(sum(col("nb"))).collect()(0).getLong(0)
-      val bound = 4.0 * math.E * n / CountMinSketch.Width
-      out.foreach(r => assert(r.getAs[Long]("overestimate") <= bound,
-        s"${r.getString(0)}: overestimate ${r.getAs[Long]("overestimate")} > $bound"))
+    val out = graft.ext.TextAnalysis.cmsHeavyHitters(t, k = 100).collect()
+    assert(out.length == 100)
+    // one-sided error: every estimate >= exact count
+    out.foreach { r =>
+      assert(r.getAs[Long]("cms_estimate") >= r.getAs[Long]("n_occurrences"),
+        s"underestimate in ${r.getString(0)}")
+      assert(r.getAs[Long]("overestimate") ==
+        r.getAs[Long]("cms_estimate") - r.getAs[Long]("n_occurrences"))
     }
+    // CMS bound: overestimate <= eps*N (N = total bigram occurrences,
+    // eps ~ e/width), checked at 4x slack so corpus wiggle can't flake
+    val n = t.documents
+      .select(greatest(
+        size(graft.ext.TextAnalysis.tokens(lower(col("text")))) - 1, lit(0))
+        .cast("long").as("nb"))
+      .agg(sum(col("nb"))).collect()(0).getLong(0)
+    val bound = 4.0 * math.E * n / CountMinSketch.Width
+    out.foreach(r => assert(r.getAs[Long]("overestimate") <= bound,
+      s"${r.getString(0)}: overestimate ${r.getAs[Long]("overestimate")} > $bound"))
     // layout independence: the sketch state is identical under any
     // partitioning (merge is elementwise addition — commutative)
     CountMinSketch.register(spark)
     import spark.implicits._
     val words = (0 until 5000).map(i => s"w${i % 700}").toDF("k")
     def state(parts: Int): Seq[Long] = words.repartition(parts)
-      .agg(CountMinSketch.cmsSketch(col("k"), portable = true)).collect()(0)
+      .agg(CountMinSketch.cmsSketch(col("k"))).collect()(0)
       .getSeq[Long](0)
     val s3 = state(3)
     assert(s3 == state(17))
@@ -291,15 +311,17 @@ class SketchPortableSpec extends SparkSpec {
     CountMinSketch.register(spark)
     import spark.implicits._
     (0 until 100).map(i => s"w${i % 7}").toDF("k").createOrReplaceTempView("cms_one_arg")
-    // both functions default portable=false when the flag is omitted
     val row = spark.sql(
       """SELECT graft_cms_sketch(k) AS st, graft_cms_key_hash('w0') AS h
         |FROM cms_one_arg""".stripMargin).collect()(0)
     assert(row.getSeq[Long](0).sum == 100L * CountMinSketch.Depth)
-    val twoArg = spark.sql(
-      "SELECT graft_cms_key_hash('w0', false) AS h FROM cms_one_arg LIMIT 1")
-      .collect()(0).getLong(0)
-    assert(row.getLong(1) == twoArg)
+    assert(row.getLong(1) == PortableHash.hash32(UTF8String.fromString("w0")))
+    // one arity: a second argument is an analysis error, not ignored
+    for (call <- Seq("graft_cms_key_hash('w0', false)", "graft_cms_sketch(k, true)")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        spark.sql(s"SELECT $call FROM cms_one_arg").collect())
+      assert(e.getMessage.contains("WRONG_NUM_ARGS"), e.getMessage)
+    }
   }
 
   test("grid-refined equi-depth edges hit their target ranks within a cell") {

@@ -187,19 +187,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    // shuffle partitions follow the input size (clamped to [cores, 4×cores],
-    // AQE coalesces the tail) — at the local fixture sizes this resolves to
-    // the core count; at cluster scale it grows with the data
-    val shuffleParts = core.GraftSession.shufflePartitionsFor(
-      core.GraftSession.inputBytes(sfDir), cpus.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = core.GraftSession.hostCores
+    val spark = core.GraftSession.fixtureSession(sfDir)
     // 1-minute load BEFORE any work: a machine already busy when the bench
     // starts is the contended-run signature that produced r4's phantom
     // regressions — recording it makes such a run self-identifying

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,17 +10,7 @@ object Verify {
     val only: Option[Set[String]] =
       args.lift(2).map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
     def selected(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // input-size-aware (clamps to the core count at local fixture sizes)
-    val shuffleParts = graft.core.GraftSession.shufflePartitionsFor(
-      graft.core.GraftSession.inputBytes(sfDir), cpus.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.fixtureSession(sfDir)
     new java.io.File(outDir).mkdirs()
     // Erroring queries must be LOUD: r5's driver compare silently omitted
     // queries with no dumped dir, so 119→83 green went unnoticed by the

@@ -1,59 +1,27 @@
 package graft.core
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, monotonically_increasing_id}
 
-/** Distributed, deterministic dense-id assignment for dictionary
-  * encodings (term → long, hot-shingle → long) — r11 verdict item 1. */
+/** Distributed, deterministic id assignment for dictionary encodings
+  * (term → long, hot-shingle → long, string key → long). */
 object DistributedIds {
 
-  /** `input` (single string column `keyCol`, distinct values,
-    * deterministic partitioning — every call site feeds an aggregate
-    * output, which is) → frame of (`keyCol`, `idCol`) with unique
-    * positive ids. Ids are `zipWithUniqueId` over a per-partition sort:
-    * id = rank-within-partition · P + partitionIndex + 1 — no count pass,
-    * no exchange, no sampling job (RDD `zipWithIndex` pays a count job
-    * for dense offsets; a global `orderBy` pays a range exchange plus a
-    * RangePartitioner sampling job; the replaced
-    * `row_number().over(Window.orderBy(key))` was worse still — a
-    * SinglePartition exchange, the one-task sort that fails outright at
-    * the 10⁸⁺-key vocabularies a 100 TB corpus produces). The assignment
-    * is deterministic for a given plan, and every consumer only needs a
-    * BIJECTION (long-id equality ≡ key equality), so any deterministic
-    * assignment — dense or not — yields identical query results.
+  /** One row per distinct `keyCol` value of `input` with a unique positive
+    * `idCol`: a BIJECTION (long-id equality ≡ key equality), not dense.
+    * Built from planned operators only, so joins against it are planned
+    * from the child's size stats and the key's `distinctKeys`. It relies on:
     *
-    * Two stats-shaping steps make the RDD-backed dictionary PLAN like the
-    * aggregate-derived frame it replaces (both measured, both load-bearing):
-    *
-    *  1. persist + count: an RDD-backed frame otherwise carries UNKNOWN
-    *     size stats (`defaultSizeInBytes` = Long.Max); after the count the
-    *     InMemoryRelation carries the dictionary's MEASURED size, so the
-    *     planner broadcasts it exactly when it actually fits (fixture
-    *     scale) and shuffle-joins it when it does not (10⁸⁺-key
-    *     production vocabularies) — scale-adaptive, no hint or config
-    *     constant involved.
-    *  2. a semantically-no-op `dropDuplicates(keyCol)` on top: Spark 4's
-    *     size-only join estimator bounds an equi-join by the non-unique
-    *     side when the other side's keys are provably DISTINCT
-    *     (`distinctKeys`); a bare RDD/cache leaf proves nothing, the join
-    *     estimate degrades to the multiplicative fallback, and every
-    *     frame built over the join inflates past the broadcast threshold
-    *     (measured: the q138 vector frame estimated 120 MB instead of
-    *     235 KB, flipping all its downstream joins to sort-merge). The
-    *     dedup is one dictionary-sized exchange at build time.
-    *
-    * The cache is per-invocation and reclaimed by the ContextCleaner when
-    * the query's frames go unreachable; nothing persists across
-    * invocations. */
-  def uniqueIds(input: DataFrame, keyCol: String, idCol: String): DataFrame = {
-    val spark = input.sparkSession
-    import spark.implicits._
-    val ids = input.sortWithinPartitions(col(keyCol)).select(col(keyCol)).as[String].rdd
-      .zipWithUniqueId()
-      .map { case (k, i) => (k, i + 1L) }
-      .toDF(keyCol, idCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ids.count()
-    ids.dropDuplicates(keyCol)
-  }
+    *  1. The `distinct()`: over an aggregate input Catalyst removes it (no
+    *     extra exchange); over a checkpointed input it restores
+    *     `distinctKeys`, without which the join estimator inflates every
+    *     frame built over the dictionary join past the broadcast threshold.
+    *  2. Determinism under task retry: the aggregate's hash partitioning
+    *     fixes each partition's key set and the sort their order, so
+    *     `monotonically_increasing_id` (partition index · 2³³ + row
+    *     position) is a function of the plan. */
+  def uniqueIds(input: DataFrame, keyCol: String, idCol: String): DataFrame =
+    input.select(col(keyCol)).distinct()
+      .sortWithinPartitions(col(keyCol))
+      .withColumn(idCol, monotonically_increasing_id() + 1L)
 }

@@ -31,6 +31,28 @@ object GraftSession {
   def local(cores: Int = 4): SparkSession =
     builder(s"local[$cores]", shufflePartitions = cores).getOrCreate()
 
+  /** Local core count of the command-line mains (Verify, Bench, PlanDump,
+    * ScaleDataGen): `SPARK_GRAFT_CPUS` when set, else every processor of
+    * the host. */
+  def hostCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** Session of the command-line mains (Verify, Bench, PlanDump) over the
+    * fixture in `sfDir`: [[hostCores]] local cores, UTC, and shuffle
+    * partitions that follow the input size — the core count at local
+    * fixture sizes, growing with the data at cluster scale. */
+  def fixtureSession(sfDir: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$hostCores]")
+      .config("spark.sql.shuffle.partitions",
+        shufflePartitionsFor(inputBytes(sfDir), hostCores).toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Input-size-aware shuffle-partition count: one shuffle partition per
     * `targetBytes` of input (the parquet-scan split convention,
     * `spark.sql.files.maxPartitionBytes`' 128 MB default), clamped to

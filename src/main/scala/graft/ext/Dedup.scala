@@ -1379,8 +1379,8 @@ object Dedup {
       .agg(count(lit(1)).as("n_rare_common"))
     // Hot-subset intersect, r12 form (guide §2.3/§4 — the SparseDotCents
     // treatment of the one documented r11 regression, copyheavy density):
-    // hot shingles are dictionary-encoded to dense longs via the
-    // distributed zipWithIndex bijection (id equality ≡ shingle equality,
+    // hot shingles are dictionary-encoded to longs via the distributed
+    // DistributedIds.uniqueIds bijection (id equality ≡ shingle equality,
     // no hash-collision contract, no single-partition window), so the
     // hotset payload the verify join shuffles is 8-byte longs instead of
     // multi-word shingle strings, and the per-pair intersect is one
@@ -1390,9 +1390,9 @@ object Dedup {
     // |A∩B| is bijection-invariant.
     graft.functions.IntersectExpressions.register(t.spark)
     val hot = dfq.filter(col("s_df") > dfCap).select(col("s"))
-    // No broadcast hint: the dictionary's measured cache stats
-    // (uniqueIds scaladoc) make the planner broadcast it exactly
-    // when the hot vocabulary actually fits, shuffle-join otherwise.
+    // No broadcast hint: the dictionary's estimated size (uniqueIds keeps
+    // the child's stats) makes the planner broadcast it when the hot
+    // vocabulary fits, shuffle-join otherwise.
     val hotIds = graft.core.DistributedIds.uniqueIds(hot, "s", "sid")
     val hotSets = post.join(hotIds, Seq("s"))
       .groupBy(col("doc_id"))

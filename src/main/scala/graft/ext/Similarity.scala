@@ -579,26 +579,6 @@ object Similarity {
   // ExactAgg cents kernels so every sum is order-independent and the
   // DuckDB twin replays the arithmetic bit-for-bit.
 
-  /** Distributed deterministic term→id bijection
-    * ([[graft.core.DistributedIds.uniqueIds]]) — replaces
-    * `row_number().over(Window.orderBy(term))`, whose empty PARTITION BY
-    * plans a SinglePartition exchange: a one-task sort of the whole
-    * vocabulary, the classic single-reducer failure at the 10⁸⁺-term
-    * vocabularies a 100 TB corpus produces (r11 verdict item 1). The ids
-    * are a bijection either way, so every downstream dot/cosine is
-    * unchanged; `input` must be term-distinct. */
-  private def termIds(input: DataFrame): DataFrame =
-    graft.core.DistributedIds.uniqueIds(input, "term", "tid")
-
-  /** Join the per-doc weight rows to the term dictionary. No broadcast
-    * hint: the dictionary's MEASURED cache stats (uniqueIds
-    * scaladoc) let the planner broadcast it exactly when it fits — and
-    * take the term-keyed shuffle join at the 10⁸⁺-term vocabularies where
-    * a forced broadcast would blow the 8 GB relation cap. */
-  private def joinTermIds(w: DataFrame, tid: DataFrame): DataFrame =
-    w.join(tid, Seq("term"))
-
-
   /** All candidate document pairs with full-vector TF-IDF cosine >= tau;
     * candidates = pairs sharing at least one term with df <= maxDfFrac·N.
     * Output: (doc_a, doc_b, n_shared_terms, cosine). */
@@ -623,16 +603,19 @@ object Similarity {
                          // rare-posting candidate stream — materialize once
 
     // Per-doc key-sorted cents vectors: the pair-scoring payload. Terms
-    // are dictionary-encoded to dense longs ([[termIds]] — a distributed
-    // deterministic BIJECTION, so long-key equality ≡ term equality with
-    // no hash-collision contract). Cents
-    // quantization is ExactAgg.cents — the SAME expression dsumProd
-    // applies — so the native merge-walk dot below reproduces
+    // are dictionary-encoded to longs (DistributedIds.uniqueIds — a
+    // distributed deterministic BIJECTION, so long-key equality ≡ term
+    // equality with no hash-collision contract). No broadcast hint on the
+    // dictionary join: the planner broadcasts the dictionary from its
+    // estimated size when it fits, and shuffle-joins the 10⁸⁺-term
+    // vocabularies where a forced broadcast would blow the 8 GB relation
+    // cap. Cents quantization is ExactAgg.cents — the SAME expression
+    // dsumProd applies — so the native merge-walk dot below reproduces
     // dsumProd(w_a, w_b) bit-for-bit (SparseDotCents scaladoc). Norms
     // fall out of the self-dot of the same vectors (identical kernel,
     // identical recombine), saving the separate norm aggregation pass.
-    val tid = termIds(df.select(col("term")))
-    val vecs = joinTermIds(w, tid)
+    val tid = graft.core.DistributedIds.uniqueIds(df, "term", "tid")
+    val vecs = w.join(tid, Seq("term"))
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_list(
         struct(col("tid"), ExactAgg.cents(col("w")).as("c")))).as("vec"))
@@ -828,9 +811,13 @@ object Similarity {
     // reproduced bit-for-bit without the pair × terms/doc expansion join
     // and its pair-keyed aggregate. Every candidate shares the indexed
     // term that proposed it, so no zero-overlap pair can appear.
+    // The dictionary is built from the df aggregate, not from the
+    // checkpointed wn (same term set): built over wn it inherits wn's size
+    // estimate, and at sf1 copyheavy the planner then broadcast the weight
+    // frame instead of the dictionary.
     graft.functions.SparseDotExpression.register(t.spark)
-    val tid = termIds(wn.select(col("term")).distinct())
-    val vecs = joinTermIds(wn, tid)
+    val tid = graft.core.DistributedIds.uniqueIds(df, "term", "tid")
+    val vecs = wn.join(tid, Seq("term"))
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_list(struct(col("tid"),
         ExactAgg.cents(col("wn") * lit(100)).as("c")))).as("vec"))

@@ -71,10 +71,9 @@ object SuffixArray {
 
   /** Distributed dense rank of the distinct rows of `df` (all-column
     * key), 1-based, in the given column sort order: distinct → total
-    * sort → zipWithIndex. The dict is localCheckpointed before anyone
-    * joins it (the [[graft.operators.DictEncode.dictionary]] doctrine:
-    * an unmaterialized dict recomputed after a fetch failure must never
-    * re-rank mid-query). */
+    * sort → zipWithIndex. The dict is localCheckpointed because it is
+    * read twice (the rank join and the distinct-rank count), and the
+    * total sort would otherwise run once per read. */
   private def denseRankDict(df: DataFrame, rankCol: String): DataFrame = {
     val spark = df.sparkSession
     val cols = df.columns

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
   *
   * Input: four long-array columns — (keys_a, cents_a, keys_b, cents_b) —
   * where each (keys, cents) pair is a document's TF-IDF weight vector:
-  * `keys` are dense dictionary ids (a deterministic bijection term → id,
+  * `keys` are dictionary ids (a deterministic bijection term → id,
   * so long-key equality ≡ term equality with NO hash-collision contract),
   * `cents` the weights quantized by [[ExactAgg.cents]], both sorted by
   * key. Output: `struct<n_shared: bigint, hi: bigint, lo: bigint>` where,

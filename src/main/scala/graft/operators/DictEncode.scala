@@ -1,38 +1,34 @@
 package graft.operators
 
-import graft.core.Tables
+import graft.core.{DistributedIds, Tables}
 import graft.functions.BitmapDistinct
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Dictionary encoding in front of [[graft.functions.BitmapDistinct]]:
   * exact distinct counting over ARBITRARY key domains (strings, negative
-  * ints) by mapping each distinct key to a dense non-negative id first.
+  * ints) by mapping each distinct key to a positive long id first.
   * Hash-based ids would be O(1) cheaper but collide — an exact aggregate
   * fed hashed keys silently undercounts; the dictionary keeps injectivity.
   *
   * Scale notes: the dictionary is itself a shuffle-distinct over the key
   * column — at 100 TB it is a PERSISTED incrementally-maintained dimension
   * (append new keys with ids above the current high-water mark), not
-  * rebuilt per query; here it is built inline, which is the single-job
-  * analog. `monotonically_increasing_id` assigns partition-local dense ids
-  * (non-negative, injective per build — exactly what the bitmap needs;
-  * values cluster per partition, which the bitmap's 64K-block containers
-  * compress well). The encode join shuffles on the key; AQE broadcasts the
+  * rebuilt per query; here it is built inline and checkpointed, which is
+  * the single-job analog. The ids come from
+  * [[graft.core.DistributedIds.uniqueIds]]: sparse (they cluster per
+  * partition, which the bitmap's 64K-block containers compress well) and
+  * injective. The encode join shuffles on the key; AQE broadcasts the
   * dictionary when it is small.
   */
 object DictEncode {
 
-  /** One row per distinct `key` with a non-negative injective `dict_id`.
-    * The ids are MATERIALIZED (localCheckpoint — the single-job analog of
-    * the persisted dictionary) before anyone joins against them:
-    * `monotonically_increasing_id` is nondeterministic under stage retry,
-    * and an unmaterialized dictionary recomputed after a fetch failure
-    * could assign the same key two different ids mid-query — the silent
-    * overcount this module exists to prevent. */
+  /** One row per distinct `key` with a positive injective `dict_id`,
+    * localCheckpointed as the stand-in for the persisted dictionary
+    * dimension: without the checkpoint the distinct's exchange lands in
+    * the consuming query's plan (PlanAuditSpec budget). */
   def dictionary(df: DataFrame, key: Column): DataFrame =
-    df.select(key.as("dict_key")).distinct()
-      .withColumn("dict_id", monotonically_increasing_id())
+    DistributedIds.uniqueIds(df.select(key.as("dict_key")), "dict_key", "dict_id")
       .localCheckpoint()
 
   /** q60: distinct STRING user keys per event type, exactly, in one

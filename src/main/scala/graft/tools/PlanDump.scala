@@ -1,35 +1,62 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentSkipListMap}
+import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.FormattedMode
+import scala.jdk.CollectionConverters._
 
-/** Dump `.explain("formatted")` for declared queries to text files —
-  * the optimization-round evidence trail (plans/r11/<query>_{before,after}.txt).
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
+  SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
+
+/** Dump the final physical plan of every SQL execution a query triggers —
+  * the eager `localCheckpoint` builds inside the query as well as the
+  * returned frame, which is executed into the `noop` sink — in execution
+  * order, to text files: the optimization-round evidence trail
+  * (plans/<round>/<query>_{before,after}.txt).
   *
   * Usage: runMain graft.tools.PlanDump <sfDir> <outDir> <suffix> [q1,q2,...]
-  * Writes <outDir>/<query>_<suffix>.txt per selected query. Uses the same
-  * session shape as graft.Bench (env-driven cores, size-derived shuffle
-  * partitions) so the dumped plans are the ones the bench actually runs.
+  * Writes <outDir>/<query>_<suffix>.txt per selected query, headed by the
+  * query's SQL execution and Spark job counts. Runs the session graft.Verify
+  * runs ([[graft.core.GraftSession.fixtureSession]]).
   */
 object PlanDump {
+
+  /** (description, plan) of each SQL execution started under job group
+    * `group` or `last`, by execution id (= start order). The start event
+    * carries the initial plan and each adaptive update the re-optimized
+    * one, so the last plan seen is the final plan. The bus delivers events
+    * in order, so once the execution started under `last` has ended,
+    * every earlier event has been seen. */
+  private final class Executions(group: String, last: String) extends SparkListener {
+    val plans = new ConcurrentSkipListMap[java.lang.Long, (String, String)]()
+    private val lastIds = ConcurrentHashMap.newKeySet[java.lang.Long]()
+    val jobs = new AtomicInteger
+    @volatile var done = false
+    private def ours(g: Option[String]) = g.contains(group) || g.contains(last)
+    // "spark.jobGroup.id" is the local property setJobGroup sets
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      if (ours(Option(e.properties).map(_.getProperty("spark.jobGroup.id")))) jobs.incrementAndGet()
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart if ours(s.jobGroupId) =>
+        plans.put(s.executionId, (s.description, s.physicalPlanDescription))
+        if (s.jobGroupId.contains(last)) lastIds.add(s.executionId)
+      case u: SparkListenerSQLAdaptiveExecutionUpdate =>
+        plans.computeIfPresent(u.executionId, (_, p) => (p._1, u.physicalPlanDescription))
+      case end: SparkListenerSQLExecutionEnd => if (lastIds.contains(end.executionId)) done = true
+      case _ => ()
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
     val suffix = args(2)
     val only: Option[Set[String]] =
       args.lift(3).map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shuffleParts = graft.core.GraftSession.shufflePartitionsFor(
-      graft.core.GraftSession.inputBytes(sfDir), cpus.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.fixtureSession(sfDir)
+    val sc = spark.sparkContext
     // SPARK_GRAFT_PLANDUMP_NOBCAST=1: dump the big-join shape (no
     // auto-broadcast), the form that shows whether bucketing saves the
     // shuffle — at 100 TB neither fact side broadcasts anyway (the same
@@ -39,13 +66,30 @@ object PlanDump {
     new java.io.File(outDir).mkdirs()
     graft.SparkEntry.queries.foreach { case (name, fn) =>
       if (only.forall(_.contains(name))) {
+        val ex = new Executions(s"plandump:$name", s"plandump:$name:result")
+        sc.addSparkListener(ex)
         try {
+          // no group description: each execution keeps its call-site label
+          sc.setJobGroup(s"plandump:$name", null)
           val df = fn(spark, sfDir)
-          val txt = df.queryExecution.explainString(FormattedMode)
-          Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), txt)
-          println(s"[plandump] wrote $name")
+          sc.setJobGroup(s"plandump:$name:result", null)
+          df.write.format("noop").mode("overwrite").save()
+          val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+          while (!ex.done && System.nanoTime() < deadline) Thread.sleep(50)
+          if (!ex.done) throw new IllegalStateException("result execution end not seen in 60 s")
+          val plans = ex.plans.asScala.toSeq
+          val body = plans.zipWithIndex.map { case ((id, (desc, plan)), i) =>
+            s"== execution ${i + 1}/${plans.size} (id $id): $desc ==\n$plan"
+          }
+          Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"),
+            (s"== $name: ${plans.size} SQL executions, ${ex.jobs.get} Spark jobs ==" +: body)
+              .mkString("", "\n\n", "\n"))
+          println(s"[plandump] wrote $name (${plans.size} executions, ${ex.jobs.get} jobs)")
         } catch { case e: Throwable =>
           System.err.println(s"[plandump] $name failed: ${e.getMessage}")
+        } finally {
+          sc.clearJobGroup()
+          sc.removeSparkListener(ex)
         }
       }
     }

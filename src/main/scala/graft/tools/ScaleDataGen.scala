@@ -263,8 +263,7 @@ object ScaleDataGen {
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
     val docMode = args.lift(3).getOrElse("copyheavy")
     val eventsMode = args.lift(4).getOrElse("uniform")
-    val spark = GraftSession.builder(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[${GraftSession.hostCores}]").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     generate(spark, src, dst, copies, docMode, eventsMode)
     spark.stop()

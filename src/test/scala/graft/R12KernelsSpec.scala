@@ -185,14 +185,52 @@ class R12KernelsSpec extends SparkSpec {
   test("DistributedIds.uniqueIds assigns a deterministic positive bijection") {
     import spark.implicits._
     val keys = (1 to 997).map(i => f"k$i%04d").reverse
-    val input = keys.toDF("term").repartition(7)
-    def run() = graft.core.DistributedIds.uniqueIds(input, "term", "tid")
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    val ids = run()
-    assert(ids.length == 997)
-    assert(ids.map(_._1).distinct.length == 997)           // one id per key
-    assert(ids.map(_._2).distinct.length == 997)           // injective
-    assert(ids.forall(_._2 >= 1L))                         // positive
-    assert(run().toMap == ids.toMap)                       // deterministic
+    val inputs = Seq(
+      "distinct keys" -> keys.toDF("term").repartition(7),
+      "duplicate keys" -> (keys ++ keys.take(300)).toDF("term").repartition(7),
+      "checkpointed" -> keys.toDF("term").repartition(7).localCheckpoint())
+    inputs.foreach { case (label, input) =>
+      def run() = graft.core.DistributedIds.uniqueIds(input, "term", "tid")
+        .collect().map(r => (r.getString(0), r.getLong(1)))
+      val ids = run()
+      assert(ids.length == 997, label)                        // one id per key
+      assert(ids.map(_._1).distinct.length == 997, label)
+      assert(ids.map(_._2).distinct.length == 997, label)     // injective
+      assert(ids.forall(_._2 >= 1L), label)                   // positive
+      assert(run().toMap == ids.toMap, label)                 // deterministic
+    }
+  }
+
+  test("DistributedIds.uniqueIds over an aggregate plans inside Catalyst: no cache, no extra exchange") {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{ExternalRDD, ExternalRDDScanExec, LogicalRDD, RDDScanExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+    import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val agg = spark.range(0, 5000)
+      .select(concat(lit("k"), (col("id") % 997).cast("string")).as("term"))
+      .groupBy(col("term")).agg(count(lit(1)).as("df"))
+    val ids = graft.core.DistributedIds.uniqueIds(agg, "term", "tid")
+    val logical = ids.queryExecution.optimizedPlan
+    assert(logical.collect {
+      case p @ (_: InMemoryRelation | _: LogicalRDD | _: ExternalRDD[_]) => p
+    }.isEmpty, logical.treeString)
+    assert(logical.distinctKeys.exists(_.toSeq match {
+      case Seq(a: AttributeReference) => a.name == "term"
+      case _ => false
+    }), s"distinctKeys ${logical.distinctKeys}")
+    assert(ids.collect().length == 997)
+    val helper = new AdaptiveSparkPlanHelper {}
+    val physical = ids.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan
+      case p => p
+    }
+    assert(helper.collect(physical) {
+      case p @ (_: InMemoryTableScanExec | _: RDDScanExec | _: ExternalRDDScanExec[_]) => p
+    }.isEmpty, physical.treeString)
+    val exchanges = helper.collect(physical) { case e: ShuffleExchangeExec => e }
+    assert(exchanges.size == 1 &&
+      exchanges.head.outputPartitioning.isInstanceOf[HashPartitioning], physical.treeString)
   }
 }

@@ -1613,69 +1613,59 @@ object Similarity {
     * q37-proven 6-dp doubles, quantized to 1e6-scale BIGINTs; the greedy
     * score is pure integer arithmetic (λ in tenths: `lambdaTenths·rel_q −
     * (10−lambdaTenths)·maxSel_q`), argmax tie-broken on vec_id — DuckDB
-    * replays every pick. First pick has an empty selected set; its
-    * diversity term is 0 by convention.
+    * replays every pick. The first pick's diversity term is 0; a pool
+    * shorter than `k` yields one rank per candidate.
     *
-    * Scale shape: candidate generation is the existing exact ranker
-    * ([[bruteForceTopK]] — swap in the LSH/IVF arm at scale, the contract
-    * is any (query_id, vec_id, cosine) candidate frame); MMR itself never
-    * touches the corpus again — the candidate frame is Q·cand rows, the
-    * pairwise-sim frame Q·cand² rows, both localCheckpoint'd once; each of
-    * the k greedy rounds is a tiny-frame join + per-query row_number. */
+    * Scale shape: candidates come from [[bruteForceTopK]] (swap in the
+    * LSH/IVF arm at scale); MMR never touches the corpus again. Each query
+    * is ONE localCheckpoint'd row — its ≤ `cand` candidates and their
+    * `cand × cand` quantized sim matrix — and all k greedy rounds run in
+    * that row as one `aggregate` fold, so per-query state is bounded by
+    * `cand` and the Spark job count does not depend on k. */
   def mmrRerank(t: Tables, nQueries: Int = 8, cand: Int = 16, k: Int = 5,
                 lambdaTenths: Int = 7): DataFrame = {
     require(lambdaTenths >= 0 && lambdaTenths <= 10,
       "mmrRerank: lambdaTenths must be in [0, 10]")
+    require(k >= 1, s"mmrRerank: k must be positive, got $k")
     graft.functions.VectorExpressions.register(t.spark)
     // quantize via round(·,0)-then-cast (the q182 convention): the product
     // of a 6-dp cosine and 1e6 is integral up to fp error, so both engines
     // round the same double to the same integer (never lands on .5)
-    val qi = round(col("cosine") * 1e6, 0).cast("long")
-    val cands = bruteForceTopK(t, nQueries, cand)
-      .select(col("query_id"), col("vec_id"), col("cosine"), qi.as("rel_q"))
-      .localCheckpoint() // Q·cand rows; seed of every greedy round
-    val withEmb = cands
+    def q6(x: Column): Column = round(x * 1e6, 0).cast("long")
+    val pools = bruteForceTopK(t, nQueries, cand)
       .join(t.embeddings.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-      .select(col("query_id"), col("vec_id"), col("embedding"))
-    val pairSim = round(round(graft.functions.VectorExpressions.cosineSim(
-      col("a_emb"), col("b_emb")), 6) * 1e6, 0).cast("long")
-    val pairs = withEmb.select(col("query_id"), col("vec_id").as("a_id"),
-        col("embedding").as("a_emb"))
-      .join(withEmb.select(col("query_id"), col("vec_id").as("b_id"),
-        col("embedding").as("b_emb")), Seq("query_id"))
-      .filter(col("a_id") =!= col("b_id"))
-      .select(col("query_id"), col("a_id"), col("b_id"), pairSim.as("sim_q"))
-      .localCheckpoint() // Q·cand² rows, corpus-independent
-    def pick(scored: DataFrame, r: Int): DataFrame = {
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("score_q").desc, col("vec_id"))
-      scored.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-        .select(col("query_id"), col("vec_id"), col("cosine"),
-          col("rel_q"), col("max_sel_q"), lit(r).as("mmr_rank"))
+      .groupBy(col("query_id"))
+      .agg(array_sort(collect_list(struct(col("vec_id"), col("cosine"),
+        q6(col("cosine")).as("rel_q"), col("embedding")))).as("pool"))
+      .select(col("query_id"), col("pool"),
+        transform(col("pool"), a => transform(col("pool"), b =>
+          q6(round(graft.functions.VectorExpressions.cosineSim(
+            a.getField("embedding"), b.getField("embedding")), 6)))).as("sims"))
+      .localCheckpoint() // Q rows: each query's whole greedy state
+    // One round: append the argmax over the unpicked candidate indices.
+    // array_max compares the structs field by field, so `neg_id` breaks
+    // score ties toward the smaller vec_id.
+    def greedyStep(picks: Column): Column = {
+      val open = filter(sequence(lit(0), size(col("pool")) - 1),
+        i => !exists(picks, s => s.getField("i") === i))
+      concat(picks, array(array_max(transform(open, i => {
+        val maxSel = coalesce(
+          array_max(transform(picks, s => col("sims")(i)(s.getField("i")))), lit(0L))
+        struct((col("pool")(i)("rel_q") * lambdaTenths -
+            maxSel * (10 - lambdaTenths)).as("score"),
+          (-col("pool")(i)("vec_id")).as("neg_id"), i.as("i"), maxSel.as("max_sel_q"))
+      }))))
     }
-    var sel = pick(cands.select(col("query_id"), col("vec_id"), col("cosine"),
-      col("rel_q"), lit(0L).as("max_sel_q"),
-      (col("rel_q") * lambdaTenths).as("score_q")), 1).localCheckpoint()
-    for (r <- 2 to k) {
-      val remaining = cands
-        .join(sel.select(col("query_id"), col("vec_id")),
-          Seq("query_id", "vec_id"), "left_anti")
-      val maxSel = remaining
-        .join(pairs.withColumnRenamed("a_id", "vec_id"),
-          Seq("query_id", "vec_id"))
-        .join(sel.select(col("query_id"), col("vec_id").as("b_id")),
-          Seq("query_id", "b_id"))
-        .groupBy(col("query_id"), col("vec_id"))
-        .agg(max(col("sim_q")).as("max_sel_q"))
-      val scored = remaining.join(maxSel, Seq("query_id", "vec_id"))
-        .select(col("query_id"), col("vec_id"), col("cosine"), col("rel_q"),
-          col("max_sel_q"),
-          (col("rel_q") * lambdaTenths -
-            col("max_sel_q") * (10 - lambdaTenths)).as("score_q"))
-      sel = sel.unionByName(pick(scored, r)).localCheckpoint() // flat lineage
-    }
-    sel.select(col("query_id"), col("mmr_rank"), col("vec_id"), col("cosine"),
-        col("rel_q"), col("max_sel_q"))
+    // one round per candidate at most, so `open` is never empty
+    val rounds = sequence(lit(1), least(lit(k), size(col("pool"))))
+    val noPicks = array().cast("array<struct<score:bigint,neg_id:bigint,i:int,max_sel_q:bigint>>")
+    pools
+      .select(col("query_id"), col("pool"),
+        posexplode(aggregate(rounds, noPicks, (picks, _) => greedyStep(picks))))
+      .select(col("query_id"), (col("pos") + 1).as("mmr_rank"),
+        col("pool")(col("col.i")).as("c"), col("col.max_sel_q").as("max_sel_q"))
+      .select(col("query_id"), col("mmr_rank"), col("c.vec_id"), col("c.cosine"),
+        col("c.rel_q"), col("max_sel_q"))
       .orderBy(col("query_id"), col("mmr_rank"))
   }
 

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentSkipListMap}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
@@ -18,7 +17,8 @@ import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdat
   *
   * Usage: runMain graft.tools.PlanDump <sfDir> <outDir> <suffix> [q1,q2,...]
   * Writes <outDir>/<query>_<suffix>.txt per selected query, headed by the
-  * query's SQL execution and Spark job counts. Runs the session graft.Verify
+  * query's SQL execution and Spark job counts, and each execution by its
+  * own job count. Runs the session graft.Verify
   * runs ([[graft.core.GraftSession.fixtureSession]]).
   */
 object PlanDump {
@@ -32,12 +32,19 @@ object PlanDump {
   private final class Executions(group: String, last: String) extends SparkListener {
     val plans = new ConcurrentSkipListMap[java.lang.Long, (String, String)]()
     private val lastIds = ConcurrentHashMap.newKeySet[java.lang.Long]()
-    val jobs = new AtomicInteger
+    /** Spark jobs by SQL execution id (-1: jobs outside any execution). */
+    val jobs = new ConcurrentHashMap[java.lang.Long, Integer]()
     @volatile var done = false
     private def ours(g: Option[String]) = g.contains(group) || g.contains(last)
-    // "spark.jobGroup.id" is the local property setJobGroup sets
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      if (ours(Option(e.properties).map(_.getProperty("spark.jobGroup.id")))) jobs.incrementAndGet()
+    // "spark.jobGroup.id" is the local property setJobGroup sets, and
+    // "spark.sql.execution.id" the one an SQL execution sets on its jobs
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      val p = Option(e.properties)
+      if (ours(p.map(_.getProperty("spark.jobGroup.id")))) {
+        val id = p.flatMap(x => Option(x.getProperty("spark.sql.execution.id"))).fold(-1L)(_.toLong)
+        jobs.merge(id, 1, (a: Integer, b: Integer) => Integer.valueOf(a + b))
+      }
+    }
     override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
       case s: SparkListenerSQLExecutionStart if ours(s.jobGroupId) =>
         plans.put(s.executionId, (s.description, s.physicalPlanDescription))
@@ -78,13 +85,15 @@ object PlanDump {
           while (!ex.done && System.nanoTime() < deadline) Thread.sleep(50)
           if (!ex.done) throw new IllegalStateException("result execution end not seen in 60 s")
           val plans = ex.plans.asScala.toSeq
+          val nJobs = ex.jobs.values.asScala.map(_.intValue).sum
           val body = plans.zipWithIndex.map { case ((id, (desc, plan)), i) =>
-            s"== execution ${i + 1}/${plans.size} (id $id): $desc ==\n$plan"
+            s"== execution ${i + 1}/${plans.size} (id $id, ${ex.jobs.getOrDefault(id, 0)} jobs): " +
+              s"$desc ==\n$plan"
           }
           Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"),
-            (s"== $name: ${plans.size} SQL executions, ${ex.jobs.get} Spark jobs ==" +: body)
+            (s"== $name: ${plans.size} SQL executions, $nJobs Spark jobs ==" +: body)
               .mkString("", "\n\n", "\n"))
-          println(s"[plandump] wrote $name (${plans.size} executions, ${ex.jobs.get} jobs)")
+          println(s"[plandump] wrote $name (${plans.size} executions, $nJobs jobs)")
         } catch { case e: Throwable =>
           System.err.println(s"[plandump] $name failed: ${e.getMessage}")
         } finally {

@@ -36,10 +36,13 @@ class RetrievalLmSpec extends SparkSpec {
     assert(mmr == bf)
   }
 
-  test("q196: full single-node greedy replica parity") {
-    val t = sf()
-    val lam = 7
-    val cands = Similarity.bruteForceTopK(t, nQueries = 4, k = 12).collect()
+  /** Single-node greedy MMR over `bruteForceTopK`'s pools: the picks as
+    * (query_id, mmr_rank, vec_id), and the number of picks whose top score
+    * was shared by more than one candidate (decided by the vec_id
+    * tie-break). */
+  private def greedyReplica(t: graft.core.Tables, nQueries: Int, cand: Int, k: Int,
+                            lam: Int): (Set[(Long, Int, Long)], Int) = {
+    val cands = Similarity.bruteForceTopK(t, nQueries, cand).collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id"),
         math.round(r.getAs[Double]("cosine") * 1e6)))
     val emb = t.embeddings.select(col("vec_id"), col("embedding")).collect()
@@ -51,25 +54,99 @@ class RetrievalLmSpec extends SparkSpec {
       math.round(BigDecimal(dp / (math.sqrt(na) * math.sqrt(nb)))
         .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble * 1e6)
     }
-    val expected = cands.groupBy(_._1).flatMap { case (qid, g) =>
+    var ties = 0
+    val picks = cands.groupBy(_._1).flatMap { case (qid, g) =>
       var sel = Vector.empty[(Long, Int)] // (vec_id, rank)
       var remaining = g.toVector
-      for (r <- 1 to 5) {
+      for (r <- 1 to math.min(k, g.length)) {
         val scored = remaining.map { case (_, v, rel) =>
           val maxSel = if (sel.isEmpty) 0L
             else sel.map(s => cosQ(emb(v), emb(s._1))).max
           (v, lam * rel - (10 - lam) * maxSel)
         }
+        val top = scored.map(_._2).max
+        if (scored.count(_._2 == top) > 1) ties += 1
         val pick = scored.minBy { case (v, s) => (-s, v) }._1
         sel :+= ((pick, r))
         remaining = remaining.filterNot(_._2 == pick)
       }
       sel.map { case (v, r) => (qid, r, v) }
     }.toSet
-    val actual = Similarity.mmrRerank(t, nQueries = 4, cand = 12, k = 5)
+    (picks, ties)
+  }
+
+  private def mmrRows(t: graft.core.Tables, nQueries: Int, cand: Int, k: Int,
+                      lam: Int): Set[(Long, Int, Long)] =
+    Similarity.mmrRerank(t, nQueries, cand, k, lam)
       .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Int]("mmr_rank"),
         r.getAs[Long]("vec_id"))).toSet
-    assert(actual == expected)
+
+  test("q196: full single-node greedy replica parity") {
+    val t = sf()
+    assert(mmrRows(t, 4, 12, 5, 7) == greedyReplica(t, 4, 12, 5, 7)._1)
+  }
+
+  test("q196: replica parity on tied scores and pools shorter than k") {
+    // ten vectors with four identical pairs (0=1, 2=3, 4=5, 7=8), so
+    // relevance and diversity scores tie and the vec_id tie-break picks
+    val vecs = Seq(
+      Seq(1f, 0f, 0f, 0f), Seq(1f, 0f, 0f, 0f), Seq(0f, 1f, 0f, 0f),
+      Seq(0f, 1f, 0f, 0f), Seq(1f, 1f, 0f, 0f), Seq(1f, 1f, 0f, 0f),
+      Seq(0f, 0f, 1f, 0f), Seq(1f, 0f, 1f, 0f), Seq(1f, 0f, 1f, 0f),
+      Seq(0.5f, 0.5f, 0.5f, 0.5f))
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("mmr_ties").toString
+    vecs.zipWithIndex.map { case (v, i) => (i.toLong, v, 0) }
+      .toDF("vec_id", "embedding", "label")
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val t = graft.core.Tables(spark, dir)
+    // cand = 20 ≥ corpus: every pool holds the 9 other vectors, k = 12 > 9
+    for (lam <- Seq(0, 3, 5, 7, 10)) {
+      val (expected, ties) = greedyReplica(t, nQueries = 4, cand = 20, k = 12, lam)
+      val actual = mmrRows(t, nQueries = 4, cand = 20, k = 12, lam)
+      assert(actual == expected, s"lambda=$lam")
+      assert(ties > 0, s"lambda=$lam: the fixture produced no tied pick")
+      for ((qid, g) <- actual.groupBy(_._1))
+        assert(g.map(_._2) == (1 to 9).toSet, s"query $qid ranks, lambda=$lam")
+    }
+  }
+
+  test("q196: Spark job count does not grow with k") {
+    val t = sf()
+    val sc = spark.sparkContext
+    /** Spark jobs started under job group `group`. The listener bus
+      * delivers in order, so once the job of a later marker group has been
+      * seen, every job of `group` has been counted. */
+    def jobs(group: String)(body: => Unit): Int = {
+      val n = new java.util.concurrent.atomic.AtomicInteger
+      @volatile var flushed = false
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+            case Some(`group`) => n.incrementAndGet()
+            case Some(g) if g == s"$group:marker" => flushed = true
+            case _ => ()
+          }
+      }
+      sc.addSparkListener(l)
+      try {
+        sc.setJobGroup(group, null)
+        body
+        sc.setJobGroup(s"$group:marker", null)
+        sc.parallelize(Seq(1), 1).count()
+        val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+        while (!flushed && System.nanoTime() < deadline) Thread.sleep(20)
+        assert(flushed, "marker job not seen in 60 s")
+        n.get
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(l)
+      }
+    }
+    val k2 = jobs("mmr-k2")(Similarity.mmrRerank(t, k = 2).collect())
+    val k8 = jobs("mmr-k8")(Similarity.mmrRerank(t, k = 8).collect())
+    assert(k2 > 0)
+    assert(k2 == k8, s"k=2 ran $k2 Spark jobs, k=8 ran $k8")
   }
 
   // ── q197 Kneser-Ney ───────────────────────────────────────────────────
